@@ -87,7 +87,7 @@ def main() -> None:
     print("   est survivors:", surv.count(), flush=True)
     spark.sparkContext.setJobDescription("dissect: hash-set verify")
     t("hash-set verify joins (noop)", lambda: noop(
-        minhash.verify_jaccard(surv, sigs, em.TAU, est_tau=None)
+        minhash.verify_jaccard(surv, sigs, em.TAU)
     ))
 
     # --- full query for reference ----------------------------------------

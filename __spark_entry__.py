@@ -221,12 +221,12 @@ def _minhash_pairs_df(spark, sf_dir):
     # to the oracle's), so ~90% of bucket-collision junk dies before the
     # candidate dropDuplicates exchange instead of after it — measured
     # 3.25M -> 388k rows into that exchange, and the two est attach joins
-    # verify_jaccard(est_tau=...) needed are gone (plan: 6 joins -> 4).
+    # the old post-join prefilter needed are gone (plan: 6 joins -> 4).
     # Same pair set by construction: est is a pure function of the pair and
     # commutes with the dedup.
     banded = minhash.band_keys(sigs, N_PERM, N_BANDS, carry_mh=True, fold_mh=False)
     cand, _ = minhash.candidate_pairs(banded, max_bucket=None, est_tau=MIN_EQ / N_PERM)
-    return minhash.verify_jaccard(cand, sigs, TAU, est_tau=None)
+    return minhash.verify_jaccard(cand, sigs, TAU)
 
 
 def _q_minhash(spark, sf_dir):

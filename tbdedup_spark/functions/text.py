@@ -55,11 +55,6 @@ def norm_text(col: str | Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
-def norm_text_sql(col: str) -> str:
-    """DuckDB mirror of ``norm_text``."""
-    return f"trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
-
-
 def shingles(norm_col: str, k: int = 5) -> Column:
     """Distinct k-char shingles of an already-normalized string column.
 
@@ -77,14 +72,6 @@ def shingles(norm_col: str, k: int = 5) -> Column:
     return F.expr(
         f"array_distinct(transform(sequence(0, greatest(length({norm_col}) - {k}, 0)),"
         f" i -> substring({norm_col}, i + 1, {k})))"
-    )
-
-
-def shingles_sql(norm_expr: str, k: int = 5) -> str:
-    """DuckDB mirror of ``shingles``."""
-    return (
-        f"list_distinct(list_transform(generate_series(0, greatest(length({norm_expr}) - {k}, 0)),"
-        f" i -> substr({norm_expr}, i + 1, {k})))"
     )
 
 
@@ -106,10 +93,6 @@ def hash32(col: str | Column) -> Column:
     return F.crc32(F.encode(c, "utf-8"))
 
 
-def hash60_sql(expr: str) -> str:
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
 def minhash_agg_cols(h_col: str, n_perm: int, seed: int = 42) -> list[Column]:
     """n_perm ``min((a*(h%P)+b)%P)`` aggregate columns over an exploded
     shingle-hash column — one groupBy pass computes the whole signature
@@ -117,14 +100,6 @@ def minhash_agg_cols(h_col: str, n_perm: int, seed: int = 42) -> list[Column]:
     p = MERSENNE_P
     return [
         F.min(((F.lit(a) * (F.col(h_col) % p) + F.lit(b)) % p)).alias(f"mh{j}")
-        for j, (a, b) in enumerate(perm_coeffs(n_perm, seed))
-    ]
-
-
-def minhash_agg_sql(h_expr: str, n_perm: int, seed: int = 42) -> list[str]:
-    p = MERSENNE_P
-    return [
-        f"min(({a} * (({h_expr}) % {p}) + {b}) % {p}) AS mh{j}"
         for j, (a, b) in enumerate(perm_coeffs(n_perm, seed))
     ]
 

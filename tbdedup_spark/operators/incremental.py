@@ -24,10 +24,12 @@ AQE decide from runtime sizes — when the batch-derived bound exceeds
 ``broadcast_threshold``, so an unexpectedly huge batch degrades to shuffle
 joins instead of a forced-broadcast driver/executor OOM. The one history-sized
 aggregation is the MinHash signature groupBy, and it must NOT be paid per
-batch: pass ``hist_mh_sigs`` (the corpus detector's precomputed signature
-table — plans/pipeline.py's stage-B relation) and the operator reads it
-instead of recomputing; recomputation from ``hist_df`` is the convenience
-path for one-shot use.
+batch: pass ``hist_mh_sigs`` (history's signature table, persisted once
+from ``minhash.minhash_signatures`` with the default md5 hash and
+``carry="hashes"``) and the operator reads it instead of recomputing;
+recomputation from ``hist_df`` is the convenience path for one-shot use.
+plans/pipeline.py commits no such table: its detector's crc32/int32
+signatures would never match these md5 bands.
 
 Within-batch duplicates are intentionally out of scope — tier verdicts are
 vs HISTORY only; run ``operators/exact`` on the batch for that.
@@ -42,15 +44,13 @@ from ..functions import text
 from . import minhash, simhash
 
 
-def _batch_hint(n_rows, threshold, multiplier: int = 1):
+def _batch_hint(n_rows: int, threshold: int, multiplier: int = 1):
     """Join-hint factory for a relation bounded by ``n_rows * multiplier``
     rows: ``F.broadcast`` when the bound fits ``threshold``, identity (AQE
-    decides from runtime sizes) when it does not. ``n_rows=None`` means the
-    caller opted out of counting (``broadcast_threshold=None``) and keeps
-    the documented small-batch broadcast contract unconditionally. Mirrors
-    the guarded hint of ``unionfind.incremental_components`` — an unguarded
-    forced broadcast crashes exactly when the batch is big."""
-    if n_rows is not None and threshold is not None and n_rows * multiplier > threshold:
+    decides from runtime sizes) when it does not. Mirrors the guarded hint
+    of ``unionfind.incremental_components`` — an unguarded forced broadcast
+    crashes exactly when the batch is big."""
+    if n_rows * multiplier > threshold:
         return lambda df: df
     return F.broadcast
 
@@ -110,15 +110,27 @@ def candidate_pairs_cross(
     probe = banded_new.select(*probe_cols)
     joined = banded_hist.join(hint(probe), ["band_idx", "band_key"])
     if carry:
-        est = (
-            F.size(F.filter(F.zip_with("_mha", "_mh", lambda x, y: x == y), lambda v: v))
-            / F.size("_mha").cast("double")
-        )
-        joined = joined.filter(est >= est_tau)
+        joined = joined.filter(minhash.est_jaccard("_mha", "_mh") >= est_tau)
     return (
         joined.select("a_id", F.col("_id").alias("b_id"))
         .dropDuplicates(["a_id", "b_id"])
     )
+
+
+def _check_hist_mh_sigs(sigs: DataFrame, n_perm: int) -> None:
+    """``hist_mh_sigs`` must be a ``minhash_signatures(carry="hashes")``
+    relation: any other carry (the pipeline's int32 sets) or a narrower
+    signature would silently never match this operator's bands and sets."""
+    cols = set(sigs.columns)
+    missing = [c for c in ["_id", *(f"mh{j}" for j in range(n_perm))] if c not in cols]
+    if missing:
+        raise ValueError(f"hist_mh_sigs lacks columns {missing} (n_perm={n_perm})")
+    carried = sigs.schema["_shingles"].dataType.simpleString() if "_shingles" in cols else None
+    if carried != "array<bigint>":
+        raise ValueError(
+            "hist_mh_sigs._shingles must be array<bigint> (minhash_signatures "
+            f'carry="hashes"), got {carried}'
+        )
 
 
 def tiered_dedup(
@@ -132,10 +144,9 @@ def tiered_dedup(
     tau: float = 0.8,
     seed: int = 42,
     est_tau: float | None = None,
-    carry: str = "hashes",
     checkpoint: bool = False,
     hist_mh_sigs: DataFrame | None = None,
-    broadcast_threshold: int | None = 5_000_000,
+    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """(id_col, tier) for every NEW row: 'exact' | 'near' | 'unique'.
 
@@ -145,33 +156,29 @@ def tiered_dedup(
     tau/seed) for verdicts to be consistent with the batch eventually
     joining that corpus.
 
-    ``hist_mh_sigs``: history's PRECOMPUTED minhash signature relation
-    (minhash.minhash_signatures schema: _id, mh0.., _shingles) — at scale
-    this is the corpus's stage-B table and passing it removes the only
-    history-sized shuffle in the operator (see module docstring). Must have
-    been built with the same k/n_perm/seed/carry.
+    ``hist_mh_sigs``: history's PRECOMPUTED minhash signature relation —
+    ``minhash.minhash_signatures(hist_df, id_col, text_col, k, n_perm,
+    seed, carry="hashes")`` persisted once (schema _id, mh0.., _shingles
+    array<bigint>). Passing it removes the only history-sized shuffle in
+    the operator (see module docstring). A relation lacking
+    mh0..mh{n_perm-1} or carrying another set type raises ValueError; the
+    k/seed/hash it was built with cannot be checked and must match.
 
     ``checkpoint`` materializes the signature relations (each feeds banding
     + the verify joins); leave False when the inputs are cheap scans, set
-    it when ``text_col`` is derived from an expensive upstream (same
-    contract as minhash.minhash_pairs).
+    it when ``text_col`` is derived from an expensive upstream.
 
     ``broadcast_threshold``: the batch is counted once (one cheap scan) and
     every broadcast hint is dropped — AQE decides from runtime sizes — when
     its batch-derived row bound (|batch| for id/signature sets, |batch| *
-    n_bands for band rows) exceeds this; ``None`` skips the count and keeps
-    the unconditional small-batch broadcast contract.
+    n_bands for band rows) exceeds this.
     """
-    mh_new = minhash.minhash_signatures(
-        new_df, id_col, text_col, k, n_perm, seed, carry=carry
-    )
-    mh_hist = (
-        hist_mh_sigs
-        if hist_mh_sigs is not None
-        else minhash.minhash_signatures(
-            hist_df, id_col, text_col, k, n_perm, seed, carry=carry
-        )
-    )
+    mh_new = minhash.minhash_signatures(new_df, id_col, text_col, k, n_perm, seed)
+    if hist_mh_sigs is not None:
+        _check_hist_mh_sigs(hist_mh_sigs, n_perm)
+        mh_hist = hist_mh_sigs
+    else:
+        mh_hist = minhash.minhash_signatures(hist_df, id_col, text_col, k, n_perm, seed)
     if checkpoint:
         mh_new = mh_new.localCheckpoint()
         if hist_mh_sigs is None:  # a supplied table is already materialized
@@ -182,12 +189,7 @@ def tiered_dedup(
     # partitions; one row per batch doc) instead of new_df — counting new_df
     # re-executes its whole upstream lineage once more, which is exactly the
     # expensive-upstream case the checkpoint knob exists for (ADVICE r5).
-    if broadcast_threshold is None:
-        n_new = None
-    elif checkpoint:
-        n_new = mh_new.count()
-    else:
-        n_new = new_df.count()
+    n_new = mh_new.count() if checkpoint else new_df.count()
     hint_ids = _batch_hint(n_new, broadcast_threshold)
     hint_band = _batch_hint(n_new, broadcast_threshold, n_bands)
 
@@ -207,26 +209,10 @@ def tiered_dedup(
     )
     # the verify joins see a candidate relation bounded by the batch's
     # bucket collisions — AQE broadcasts it against the signature relations
-    near = minhash.verify_jaccard(
-        cand, mh_new.unionByName(mh_hist), tau, est_tau=None
-    )
-    near_ids = (
-        near.select(F.col("a_id").alias("_id"))
-        .distinct()
-        .join(exact_ids, "_id", "left_anti")
-    )
-
-    return (
-        new_df.select(F.col(id_col).alias("_id"))
-        .join(hint_ids(exact_ids.withColumn("_t1", F.lit(True))), "_id", "left")
-        .join(hint_ids(near_ids.withColumn("_t2", F.lit(True))), "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.when(F.col("_t1"), F.lit("exact"))
-            .when(F.col("_t2"), F.lit("near"))
-            .otherwise(F.lit("unique"))
-            .alias("tier"),
-        )
+    near = minhash.verify_jaccard(cand, mh_new.unionByName(mh_hist), tau)
+    near_ids = near.select(F.col("a_id").alias("_id")).distinct()
+    return _tier_select(
+        new_df, id_col, [("exact", exact_ids), ("near", near_ids)], hint=hint_ids
     )
 
 
@@ -280,7 +266,7 @@ def tiered_image_dedup(
     phash_col: str = "phash",
     max_hamming: int = 7,
     n_bands: int = 8,
-    broadcast_threshold: int | None = 5_000_000,
+    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """(id_col, tier) for every NEW image: 'exact' | 'near' | 'unique' —
     ``tiered_dedup``'s batch-vs-corpus shape applied to the input_hint image
@@ -302,7 +288,7 @@ def tiered_image_dedup(
     ``broadcast_threshold`` guards the hints exactly as in ``tiered_dedup``
     (band rows count |batch| * n_bands against it).
     """
-    n_new = new_imgs.count() if broadcast_threshold is not None else None
+    n_new = new_imgs.count()
     hint_ids = _batch_hint(n_new, broadcast_threshold)
     hint_band = _batch_hint(n_new, broadcast_threshold, n_bands)
     exact_ids, near_ids = _image_exact_near_ids(
@@ -320,7 +306,8 @@ def _image_exact_near_ids(
 ):
     """(exact_ids, near_ids) — the first two rungs of every image tier
     ladder, shared by the 3- and 4-tier variants so a fix to either rung
-    lands in both. near is already anti-joined against exact (precedence)."""
+    lands in both. The sets may overlap; ``_tier_select`` applies the
+    precedence."""
     sig = F.sha2(F.col(bytes_col), 256)
     exact_ids = exact_matches(
         new_imgs.select(F.col(id_col).alias("_id"), sig.alias("_sig")),
@@ -333,15 +320,17 @@ def _image_exact_near_ids(
         max_hamming=max_hamming,
         n_bands=n_bands,
         hint=hint_band,
-    ).join(exact_ids, "_id", "left_anti")
+    )
     return exact_ids, near_ids
 
 
-def _tier_select(new_imgs, id_col, tiers, hint=F.broadcast):
+def _tier_select(new_df, id_col, tiers, hint=F.broadcast):
     """(id_col, tier) via first-match precedence over ``tiers`` =
-    [(label, ids_df), ...] — each ids_df is batch-bounded and join-hinted;
-    rows matching no tier read 'unique'."""
-    out = new_imgs.select(F.col(id_col).alias("_id"))
+    [(label, ids_df), ...] — each ids_df is batch-bounded, distinct and
+    join-hinted; the sets may overlap (a row in several takes the first
+    label, so no tier needs anti-joining against earlier ones); rows
+    matching no tier read 'unique'."""
+    out = new_df.select(F.col(id_col).alias("_id"))
     for i, (_, ids) in enumerate(tiers):
         out = out.join(
             hint(ids.withColumn(f"_t{i}", F.lit(True))), "_id", "left"
@@ -492,7 +481,7 @@ def tiered_image_crop_dedup(
     max_hamming: int = 7,
     n_bands: int = 8,
     min_shared: int = 2,
-    broadcast_threshold: int | None = 5_000_000,
+    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """(id_col, tier) for every NEW image: 'exact' | 'near' | 'crop' |
     'unique' — ``tiered_image_dedup`` extended with the round's
@@ -513,11 +502,8 @@ def tiered_image_crop_dedup(
     the hints as in ``tiered_dedup``; the crop probe's bound is
     |new_psigs| (already per-patch), counted separately from the batch.
     """
-    if broadcast_threshold is not None:
-        n_new = new_imgs.count()
-        n_psig = new_psigs.count()
-    else:
-        n_new = n_psig = None
+    n_new = new_imgs.count()
+    n_psig = new_psigs.count()
     hint_ids = _batch_hint(n_new, broadcast_threshold)
     hint_band = _batch_hint(n_new, broadcast_threshold, n_bands)
     hint_crop = _batch_hint(n_psig, broadcast_threshold)
@@ -525,13 +511,8 @@ def tiered_image_crop_dedup(
         new_imgs, hist_imgs, id_col, bytes_col, phash_col, max_hamming, n_bands,
         hint_ids, hint_band,
     )
-    crop_ids = (
-        crop_matches_cross(
-            new_psigs, hist_psigs, id_col=id_col, min_shared=min_shared,
-            hint=hint_crop,
-        )
-        .join(exact_ids, "_id", "left_anti")
-        .join(near_ids, "_id", "left_anti")
+    crop_ids = crop_matches_cross(
+        new_psigs, hist_psigs, id_col=id_col, min_shared=min_shared, hint=hint_crop
     )
     return _tier_select(
         new_imgs,

@@ -14,7 +14,7 @@ formulas run on DuckDB for the correctness oracle):
         └─md5/60-bit/perm─> groupBy(id).agg(min×n)      [shuffle 1: by id]
           └─explode bands─> (band_idx, band_key, id)    [no shuffle]
             └─self-join on (band_idx, band_key)         [shuffle 2: by band]
-              └─Jaccard verify join (shingle arrays)    [shuffle 3: by id]
+              └─Jaccard verify join (hash-set arrays)   [shuffle 3: by id]
 
 Skew handling (north_rule requirement): a degenerate band key (e.g. every
 caption sharing a stop-phrase) creates a quadratic bucket. ``max_bucket``
@@ -26,11 +26,13 @@ skew-join splitting handles residual imbalance.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text
 from ..plans.partitioning import fan_out_small_scan
+
+SALT_CHUNKS = 8  # salted regime: chunk ids per hot bucket (~S(S+1)/2 join cells)
 
 
 def exploded_shingles(
@@ -74,33 +76,31 @@ def minhash_signatures(
     n_perm: int = 16,
     seed: int = 42,
     hash_fn=None,
-    carry: str = "shingles",
+    carry: str = "hashes",
 ) -> DataFrame:
-    """(id, mh0..mh{n-1}, shingles) — one explode + one groupBy(id).
+    """(id, mh0..mh{n-1}, _shingles) — one explode + one groupBy(id).
 
     MinHash mins are over the shingle *multiset* (identical to set-mins);
-    ``collect_set`` carries the distinct-shingle array for the Jaccard
-    verify in the same aggregation pass — no second explode, no join.
+    ``collect_set`` carries the distinct-hash array for the Jaccard verify
+    in the same aggregation pass — no second explode, no join.
 
-    ``carry="hashes"`` carries ``collect_set(_h)`` (array<long>) instead of
-    the shingle strings — the THROUGHPUT form: the set column is the fat
-    payload of this detector's every shuffle (the groupBy, the signature
-    checkpoint, and both verify joins; on a multi-executor cluster those
-    bytes cross JVMs), and packed longs are ~4x smaller than UTF8 shingles
-    with a far cheaper array_intersect. Jaccard over distinct hashes equals
-    Jaccard over shingles modulo hash collisions (~|union|^2/2^32 per pair
-    with crc32 — odds ~1e-5, deterministic, and only perturbs near-threshold
-    scores). Queries that must mirror DuckDB bit-exactly keep "shingles".
+    ``carry="hashes"`` carries ``collect_set(_h)`` (array<long>): the set
+    column is the fat payload of this detector's every shuffle (the groupBy,
+    the signature checkpoint, and both verify joins; on a multi-executor
+    cluster those bytes cross JVMs), and packed longs are ~4x smaller than
+    UTF8 shingles with a far cheaper array_intersect. Jaccard over distinct
+    hashes equals Jaccard over shingles modulo hash collisions; with the
+    default md5 ``hash60`` DuckDB computes the same hashes, so oracle
+    queries stay bit-exact. ``carry="hashes32"`` halves the bytes again
+    (see below).
     """
     hash_fn = hash_fn or text.hash60  # hash60: oracle-grade (DuckDB md5
     # mirror); pass text.hash32 (crc32) in throughput paths — ~100x cheaper,
     # python-mirrorable via zlib.crc32, collisions only add candidates
-    if carry not in ("shingles", "hashes", "hashes32"):
-        # a typo ('hash32', 'hashes64') would otherwise fall through to the
-        # fat string carry silently (review catch) — reject it loudly
-        raise ValueError(
-            f'carry must be "shingles" | "hashes" | "hashes32", got {carry!r}'
-        )
+    if carry not in ("hashes", "hashes32"):
+        # a typo ('hash32', 'hashes64') must not fall through to some other
+        # carry silently (review catch) — reject it loudly
+        raise ValueError(f'carry must be "hashes" | "hashes32", got {carry!r}')
     if carry == "hashes32" and hash_fn is not text.hash32:
         # the int32 fold below is a bijection of [0, 2^32) ONLY; a 60-bit
         # hash would silently wrap, making the fold non-injective and the
@@ -127,7 +127,7 @@ def minhash_signatures(
         # 32-bit base hash (hash_fn=text.hash32).
         carry_col = F.collect_set((F.col("_h") - F.lit(2147483648)).cast("int"))
     else:
-        carry_col = F.collect_set("_h" if carry == "hashes" else "_sh")
+        carry_col = F.collect_set("_h")
     return exploded.groupBy("_id").agg(
         *text.minhash_agg_cols("_h", n_perm, seed),
         carry_col.alias("_shingles"),
@@ -195,19 +195,28 @@ def band_keys(
     return sigs.select(*cols).select(*out)
 
 
+def est_jaccard(mh_a: str, mh_b: str) -> Column:
+    """Estimated Jaccard of two carried minhash vectors (``band_keys(
+    carry_mh=True)``'s ``_mh``): the fraction of equal coordinates, an
+    unbiased estimator the band rows already carry for free."""
+    return (
+        F.size(F.filter(F.zip_with(mh_a, mh_b, lambda x, y: x == y), lambda v: v))
+        / F.size(mh_a).cast("double")
+    )
+
+
 def candidate_pairs(
     banded: DataFrame,
     max_bucket: int | None = 64,
     salt_cap: int | None = None,
-    salt_chunks: int = 8,
     est_tau: float | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Self-join per (band_idx, band_key); returns (pairs, dropped_buckets).
 
     ``est_tau`` (requires ``banded`` built with ``carry_mh=True``): the
-    estimated-Jaccard prefilter (fraction of equal minhash coordinates)
-    applied INSIDE the bucket self-join, before the pair relation is ever
-    shuffled. The candidate relation is the detector's combinatorial object —
+    estimated-Jaccard prefilter (``est_jaccard``) applied INSIDE the bucket
+    self-join, before the pair relation is ever shuffled. The candidate
+    relation is the detector's combinatorial object —
     measured 95.2M distinct candidates from a 300k-row corpus (stop-phrase
     band keys; grows superlinearly) of which 0.2% survive verification;
     filtering at the join means the 99.8% junk never reaches the
@@ -218,11 +227,11 @@ def candidate_pairs(
 
     * size <= max_bucket — plain band-key self-join.
     * max_bucket < size <= salt_cap (when set) — SALTED self-join: members
-      get a chunk id ``hash(id) % S``; the left side is replicated to every
-      chunk >= its own and the join key becomes (band, chunk) — one
-      quadratic bucket becomes ~S(S+1)/2 independent join cells that
-      schedule across the cluster instead of one monster task. Same pair
-      set, ~S/2x replication of the narrow (id, band) rows.
+      get a chunk id ``hash(id) % SALT_CHUNKS``; the left side is
+      replicated to every chunk >= its own and the join key becomes (band,
+      chunk) — one quadratic bucket becomes ~S(S+1)/2 independent join
+      cells that schedule across the cluster instead of one monster task.
+      Same pair set, ~S/2x replication of the narrow (id, band) rows.
     * size > cap — dropped AND REPORTED via ``dropped_buckets`` (band_idx,
       band_key, bucket_size): at web scale the mega-bucket is a stop-phrase
       bucket; its pairs are either worthless or recovered by the exact/
@@ -246,10 +255,7 @@ def candidate_pairs(
     carry = est_tau is not None
     if carry and "_mh" not in banded.columns:
         raise ValueError("est_tau requires banded rows built with carry_mh=True")
-    _est = (
-        F.size(F.filter(F.zip_with("_mha", "_mhb", lambda x, y: x == y), lambda v: v))
-        / F.size("_mha").cast("double")
-    )
+    _est = est_jaccard("_mha", "_mhb")
 
     def _side(df, idn, mhn):
         cols = [F.col("_id").alias(idn), "band_idx", "band_key"]
@@ -304,10 +310,10 @@ def candidate_pairs(
     if max_bucket and salt_cap and salt_cap > max_bucket:
         hot = sized.filter(
             (F.col("_bsz") > max_bucket) & (F.col("_bsz") <= salt_cap)
-        ).withColumn("_chunk", F.pmod(F.xxhash64("_id"), F.lit(salt_chunks)))
+        ).withColumn("_chunk", F.pmod(F.xxhash64("_id"), F.lit(SALT_CHUNKS)))
         # left side replicated to every chunk >= its own; right side keyed
         # by its own chunk -> join cell (band, cb) holds chunk pair (ca, cb)
-        chunks = F.array(*[F.lit(j) for j in range(salt_chunks)])
+        chunks = F.array(*[F.lit(j) for j in range(SALT_CHUNKS)])
         ha_cols = [F.col("_id").alias("a_id"), "band_idx", "band_key", F.col("_chunk").alias("_ca")]
         hb_cols = [F.col("_id").alias("b_id"), "band_idx", "band_key", F.col("_chunk").alias("_cb")]
         if carry:
@@ -335,37 +341,12 @@ def candidate_pairs(
     return pairs.dropDuplicates(["a_id", "b_id"]), dropped
 
 
-def verify_jaccard(
-    pairs: DataFrame, sigs: DataFrame, tau: float = 0.6, est_tau: float | None = None
-) -> DataFrame:
-    """Exact Jaccard on the carried shingle arrays (built-in array ops), the
+def verify_jaccard(pairs: DataFrame, sigs: DataFrame, tau: float = 0.6) -> DataFrame:
+    """Exact Jaccard on the carried hash-set arrays (built-in array ops), the
     analog of the reference's verify-before-write (tbdedup/dedup/__init__.py:
     142-151): candidates are *checked*, never trusted. Two narrow joins.
-
-    ``est_tau``: optional cheap prefilter — the fraction of equal minhash
-    coordinates is an unbiased estimator of Jaccard, and the n_perm coords
-    are ALREADY computed (they built the band keys). Joining the ~100-byte
-    minhash vectors and filtering est >= est_tau before the expensive
-    shingle-array join kills collision-junk candidates at ~1/10 the shuffle
-    bytes: measured 8.57M candidates -> 44.8k true pairs on the 75k-row
-    bench corpus, where the unfiltered array join was 158s of a 276s
-    pipeline. Set est_tau ~= tau/2 (>= 3 sigma below tau for n_perm = 16) so
-    a true pair's drop probability is ~1e-5; the exact verify then restores
-    precision. Leave None for bit-exact oracle mirroring."""
-    if est_tau is not None:
-        n_perm = sum(1 for c in sigs.columns if c.startswith("mh"))
-        mh_arr = F.array(*[F.col(f"mh{j}") for j in range(n_perm)])
-        mhs = sigs.select("_id", mh_arr.alias("_mha"))
-        est = (
-            F.size(F.filter(F.zip_with("_va", "_vb", lambda x, y: x == y), lambda v: v))
-            / F.lit(float(n_perm))
-        )
-        pairs = (
-            pairs.join(mhs.select(F.col("_id").alias("a_id"), F.col("_mha").alias("_va")), "a_id")
-            .join(mhs.select(F.col("_id").alias("b_id"), F.col("_mha").alias("_vb")), "b_id")
-            .filter(est >= est_tau)
-            .select("a_id", "b_id")
-        )
+    Any estimated-Jaccard prefilter belongs in the band join
+    (``candidate_pairs(est_tau=...)``), before the pairs are shuffled."""
     # |A ∪ B| = |A| + |B| - |A ∩ B| for the distinct-element set columns, so
     # one array_intersect (hash-set build + probe) replaces intersect + union
     # — exactly half the per-pair set work, same integer sizes, bit-identical
@@ -413,33 +394,29 @@ def minhash_pairs(
     tau: float = 0.6,
     seed: int = 42,
     max_bucket: int | None = 64,
-    checkpoint: bool = True,
     salt_cap: int | None = None,
-    salt_chunks: int = 8,
     hash_fn=None,
     est_tau: float | None = None,
-    carry: str = "shingles",
-    hash_band_keys: bool = False,
+    carry: str = "hashes",
 ) -> tuple[DataFrame, DataFrame]:
     """End-to-end detector: (verified pairs PAIRS-schema, dropped buckets).
 
-    ``checkpoint`` materializes the signature relation once — it feeds three
-    consumers (banding, and both sides of the Jaccard verify join); without
-    it the explode+groupBy DAG re-executes per consumer. On a real cluster
-    this is the stage-B Iceberg table (plans/pipeline.py writes it there).
+    The signature relation is materialized once (``localCheckpoint``) — it
+    feeds three consumers (banding, and both sides of the Jaccard verify
+    join); without it the explode+groupBy DAG re-executes per consumer.
+    Band keys are xxhash64 (``band_keys(hash_keys=True)``): 8-byte join keys,
+    and a key collision only adds candidates the exact verify removes.
 
     ``est_tau`` is applied INSIDE the bucket self-join (candidate_pairs):
     the minhash vector rides the band rows and junk candidates die before
     the pair relation is shuffled — see candidate_pairs for the measured
     combinatorics. verify_jaccard then does only the exact set verify.
     """
-    sigs = minhash_signatures(df, id_col, text_col, k, n_perm, seed, hash_fn, carry)
-    if checkpoint:
-        sigs = sigs.localCheckpoint()
+    sigs = minhash_signatures(
+        df, id_col, text_col, k, n_perm, seed, hash_fn, carry
+    ).localCheckpoint()
     banded = band_keys(
-        sigs, n_perm, n_bands, carry_mh=est_tau is not None, hash_keys=hash_band_keys
+        sigs, n_perm, n_bands, carry_mh=est_tau is not None, hash_keys=True
     )
-    cand, dropped = candidate_pairs(
-        banded, max_bucket, salt_cap, salt_chunks, est_tau=est_tau
-    )
-    return verify_jaccard(cand, sigs, tau, est_tau=None), dropped
+    cand, dropped = candidate_pairs(banded, max_bucket, salt_cap, est_tau=est_tau)
+    return verify_jaccard(cand, sigs, tau), dropped

@@ -7,17 +7,16 @@ tbdedup/planner/walk.py:100-125) to content containment.
 
 Two implementations:
 
-* ``containment_pairs`` (default, complete): min-shingle probe against an
-  inverted shingle index. If short ⊆ long, every k-shingle of short is a
-  shingle of long, so short's *minimum* shingle hash appears in long's
+* ``containment_pairs`` (default, complete): rarest-shingle probe against
+  an inverted shingle index. If short ⊆ long, every k-shingle of short is a
+  shingle of long, so any one shingle hash of short appears in long's
   shingle set — probing with 1 row/doc against the exploded index finds every
   containment (recall 1), and a built-in ``contains()`` filter removes hash
   coincidences (precision 1). Cost: the index is ~total-chars rows; at
-  10^12-doc scale set ``winnow_w`` > 1 to keep only window-minimal shingles
-  (MOSS winnowing) — guarantees retention of any match of length
-  ≥ k + winnow_w - 1, shrinking the index ~winnow_w×. The probe side stays
-  one row per doc either way, so the join is a skew-tolerant hash join on a
-  60-bit key.
+  scale set ``sample_mod`` > 1 to keep only hash % m == 0 shingles (value
+  sampling is containment-closed, so the shrink is exact). The probe side
+  stays one row per doc either way, so the join is a skew-tolerant hash
+  join on the shingle hash.
 
 * ``containment_pairs_sa`` (dense-bucket path): per-bucket generalized
   suffix array built in numpy inside ``applyInPandas`` — the north_rule's
@@ -128,84 +127,41 @@ def containment_pairs(
     id_col: str = "image_id",
     text_col: str = "caption",
     k: int = 5,
-    winnow_w: int = 1,
     sample_mod: int = 1,
 ) -> DataFrame:
-    """Complete containment detection: winnowed-min probe vs inverted index.
+    """Complete containment detection: rarest-fingerprint probe vs inverted
+    index.
 
-    ``winnow_w = 1``: probe = each doc's global bottom-1 shingle hash; index
-    = every distinct shingle hash. Complete because short ⊆ long implies
-    every shingle of short (in particular its min) is a shingle of long.
+    ``sample_mod = 1``: index = every distinct shingle hash; probe = one of
+    the doc's own shingle hashes. Complete because short ⊆ long implies
+    every shingle of short is a shingle of long.
 
-    ``winnow_w > 1`` (the scale path — index shrinks ~w×): index = CLASSIC
-    winnowing fingerprints (rightmost argmin of each full w-window of
-    shingle hashes — selection depends only on window content, so any window
-    shared by two docs selects the same fingerprint in both). Probe = the
-    doc's minimum over its OWN winnowed fingerprints: that fingerprint was
-    selected from some full window W of the probe; if probe ⊆ container, W
-    is also a full window of the container, which therefore selected the
-    same fingerprint into its index. (Probing with the *global* min shingle
-    instead is the subtle recall bug: the global min may sit in a window
-    whose rightmost-min is a smaller neighbouring hash in the container.)
-
-    ``sample_mod = m > 1`` (the cheaper scale path for FULL-string
-    containment): keep only fingerprints with hash % m == 0. Value-based
-    sampling is trivially containment-closed — short ⊆ long means every
-    (sampled) shingle of short is a (sampled) shingle of long — so unlike
-    positional winnowing it needs no window argument, and it is a pure
-    filter: no extra groupBy, no higher-order functions (measured: winnowing
-    w=4 cost +40s on an 11M-shingle corpus at 4 cores; mod-sampling is
+    ``sample_mod = m > 1`` (the scale path for FULL-string containment):
+    keep only fingerprints with hash % m == 0. Value-based sampling is
+    trivially containment-closed — short ⊆ long means every (sampled)
+    shingle of short is a (sampled) shingle of long — so it needs no window
+    argument, and it is a pure filter: no extra groupBy, no higher-order
+    functions (measured: positional winnowing w=4 cost +40s on an
+    11M-shingle corpus at 4 cores for the same shrink; mod-sampling is
     free). Docs whose sample comes out empty fall back to the brute path,
-    keeping completeness exact. Composes with winnow_w.
+    keeping completeness exact.
 
-    Docs too short to own a full window (length < k + winnow_w - 1) take the
-    brute-force broadcast path; empty strings are excluded by contract.
-    ``contains()`` verification makes precision exact either way.
+    Docs shorter than k take the brute-force broadcast path; empty strings
+    are excluded by contract. ``contains()`` verification makes precision
+    exact either way.
     """
     base = df.select(
         F.col(id_col).alias("_id"),
         text.norm_text(text_col).alias("_norm"),
     )
-    min_len = k + winnow_w - 1
-    long_enough = base.filter(F.length("_norm") >= min_len)
+    long_enough = base.filter(F.length("_norm") >= k)
     hashes = _exploded_hashes(long_enough, "_id", "_norm", k, normalized=True)
-
-    if winnow_w > 1:
-        # One groupBy reassembles the positional hash array, then the whole
-        # winnowing selection is a higher-order-function EXPRESSION — O(n*w)
-        # per doc inside codegen. (The window-function formulation — three
-        # per-doc windows over the exploded 11M-row relation — measured 72s
-        # vs 43s unwinnowed at 4 cores; this form removes the window sorts.)
-        # struct(h, -i): array_min = smallest hash, rightmost on ties — the
-        # content-relative tie-break classic winnowing needs.
-        w = int(winnow_w)
-        g = (
-            hashes.groupBy("_id")
-            .agg(F.sort_array(F.collect_list(F.struct("_i", "_h"))).alias("_s"))
-            .select("_id", F.col("_s._h").alias("_hs"))
-            .select(
-                "_id",
-                F.expr(
-                    "zip_with(_hs, sequence(0, size(_hs) - 1),"
-                    " (h, i) -> struct(h AS h, -i AS ni))"
-                ).alias("_ks"),
-            )
-            .select(
-                "_id",
-                F.expr(
-                    f"array_distinct(transform(sequence(0, size(_ks) - {w}),"
-                    f" i -> array_min(slice(_ks, i + 1, {w})).h))"
-                ).alias("_kept"),
-            )
-        )
-        kept = g.select("_id", F.explode("_kept").alias("_h"))
-    else:
-        kept = hashes.select("_id", "_h").dropDuplicates(["_id", "_h"])
+    kept = hashes.select("_id", "_h").dropDuplicates(["_id", "_h"])
     if sample_mod > 1:
         kept = kept.filter(F.pmod("_h", F.lit(sample_mod)) == 0)
 
     # Materialized once: kept feeds the DF aggregate, the probe join, and
-    # the index side — without this the explode+groupBy DAG re-executes
+    # the index side — without this the explode+dedup DAG re-executes
     # three times (round-1 lesson).
     kept = kept.localCheckpoint()
 
@@ -230,13 +186,13 @@ def containment_pairs(
         "short_id", "long_id"
     )
     pairs = _verified_pairs(cand, base)
-    brute = base.filter((F.length("_norm") < min_len) & (F.length("_norm") >= 1))
+    brute = base.filter((F.length("_norm") < k) & (F.length("_norm") >= 1))
     if sample_mod > 1:
         # docs long enough to index whose sample came out empty: exact
         # completeness demands they probe brute-force (rare: P ~ (1-1/m)^s)
         no_sample = long_enough.join(kept.select("_id").distinct(), "_id", "left_anti")
         brute = brute.unionByName(no_sample)
-    if min_len > 1 or sample_mod > 1:
+    if k > 1 or sample_mod > 1:
         pairs = pairs.unionByName(_brute_pairs(brute, base)).dropDuplicates(["a_id", "b_id"])
     return pairs
 

@@ -49,12 +49,31 @@ def _psnr_udf(a, b):
     return _psnr_cached(a, b)
 
 
+def _fetch_bytes(images: DataFrame, ids: DataFrame) -> DataFrame:
+    """``images`` rows whose image_id is in the (small, distinct) ``ids``.
+
+    The id set is tiny by construction (cheap proofs cover ~99.9% of
+    members; quarantine is rarer still), so it is pushed down as an isin
+    FILTER: parquet row-group stats + column-index page pruning then skip
+    most of the bytes pages, where a broadcast semi-join must decompress
+    the full bytes column (measured on a 17 GB corpus, 1190 residual ids:
+    33.5s semi-join scan vs 12.3s pushdown). Falls back to the semi-join if
+    the set is abnormally large (corrupt corpus) — an isin literal list has
+    driver-size limits. take(cap+1), never collect(): on exactly the
+    corrupt corpus the guard exists for, an unbounded collect would pull
+    the whole id set into the driver before the fallback could trigger."""
+    id_rows = [r.image_id for r in ids.take(100_001)]
+    if len(id_rows) <= 100_000:
+        return images.filter(F.col("image_id").isin(id_rows))
+    return images.join(F.broadcast(ids), "image_id", "left_semi")
+
+
 def check_members(
     clusters: DataFrame,
     images: DataFrame,
+    sigs: DataFrame,
     min_psnr_db: float = 40.0,
     caption_tau: float = 0.5,
-    sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Per-member invariants (psnr_db, cap_sim, cap_contain, ok) vs the
     representative — LAZILY: the invariant is (pixel-dup OR caption-dup), so
@@ -72,13 +91,10 @@ def check_members(
     rare by construction.
 
     ``clusters``: (image_id, cluster_id, is_representative);
-    ``images``: full IMAGES table; ``sigs``: optional SIGNATURES relation
-    (computed from images when absent).
+    ``images``: full IMAGES table; ``sigs``: the SIGNATURES relation
+    already computed from ``images`` (recomputing it here would repeat the
+    whole-corpus canonical pixel decode).
     """
-    if sigs is None:
-        from . import exact as _exact
-
-        sigs = _exact.signatures(images)
     narrow = sigs.select("image_id", "sig", "caption")
 
     members = clusters.filter(~F.col("is_representative"))
@@ -154,42 +170,19 @@ def check_members(
     )
 
     residual = cheap.filter(~cheap_ok).select("image_id", "cluster_id", "_rep_id", "_cap_sim", "_cap_contain")
-    # Bytes fetch for the residual ONLY, as one broadcast-semi-filtered scan:
-    # joining the full images table against a 0.1%-sized residual would
-    # otherwise shuffle the entire bytes column (measured: the verify stage
-    # spent ~20s re-scanning+joining a 4.2 GB corpus for 276 residual rows).
-    # The id list is tiny (2 ids per residual row), the scan happens once,
-    # and the resulting narrow bytes relation is small enough for AQE to
-    # broadcast into both sides of the residual join.
+    # Bytes fetch for the residual ONLY (see _fetch_bytes): joining the
+    # full images table against a 0.1%-sized residual would otherwise
+    # shuffle the entire bytes column (measured: the verify stage spent ~20s
+    # re-scanning+joining a 4.2 GB corpus for 276 residual rows). The
+    # fetched narrow bytes relation is small enough for AQE to broadcast
+    # into both sides of the residual join.
     ids = (
         residual.select(F.col("image_id").alias("_fid"))
         .unionByName(residual.select(F.col("_rep_id").alias("_fid")))
         .distinct()
         .withColumnRenamed("_fid", "image_id")
     )
-    # The residual id set is tiny by construction (cheap proofs cover ~99.9%
-    # of members), so push it down as an isin FILTER: parquet row-group stats
-    # + column-index page pruning then skip most of the bytes pages, where a
-    # broadcast semi-join must decompress the full bytes column (measured on
-    # a 17 GB corpus, 1190 residual ids: 33.5s semi-join scan vs 12.3s
-    # pushdown). Fallback to the semi-join if the residual is abnormally
-    # large (corrupt corpus) — an isin literal list has driver-size limits.
-    # take(cap+1), never collect(): on exactly the corrupt corpus the guard
-    # exists for, an unbounded collect would pull the whole id set into the
-    # driver before the fallback could trigger.
-    id_rows = [r.image_id for r in ids.take(100_001)]
-    if len(id_rows) <= 100_000:
-        img_bytes = (
-            images.filter(F.col("image_id").isin(id_rows))
-            .select("image_id", "bytes")
-            .localCheckpoint()
-        )
-    else:
-        img_bytes = (
-            images.join(F.broadcast(ids), "image_id", "left_semi")
-            .select("image_id", "bytes")
-            .localCheckpoint()
-        )
+    img_bytes = _fetch_bytes(images, ids).select("image_id", "bytes").localCheckpoint()
     decoded = (
         residual.join(img_bytes.withColumnRenamed("bytes", "_mb"), "image_id")
         .join(
@@ -210,22 +203,10 @@ def check_members(
     return proven.unionByName(decoded)
 
 
-def split_verified(
-    clusters: DataFrame,
-    checked: DataFrame,
-    images: DataFrame | None = None,
-    evidence_cap: int = 1 << 20,
-) -> tuple[DataFrame, DataFrame]:
-    """(verified CLUSTERS rows, QUARANTINE rows) from a materialized
-    ``check_members`` output — the cheap half.
-
-    When ``images`` is given, each quarantine row carries the failing
-    member's bytes (size-capped at ``evidence_cap``) — parity with the
-    reference preserving the mismatched record as a standalone
-    ``<hash>.orig-<id>.mboxrecord`` artifact
-    (tbdedup/dedup/__init__.py:146-149): the row alone reproduces the
-    mismatch offline (decode evidence_bytes, decode the rep via rep_id,
-    recompute PSNR) without re-running the join."""
+def split_verified(clusters: DataFrame, checked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(verified CLUSTERS rows, QUARANTINE rows without evidence) from a
+    materialized ``check_members`` output — the cheap half. The caller
+    attaches the failing members' bytes with ``attach_evidence``."""
     verified = checked.filter("ok").select(
         "image_id", "cluster_id", F.lit(False).alias("is_representative")
     )
@@ -240,7 +221,6 @@ def split_verified(
         F.col("psnr_db"),
         F.col("cap_sim"),
     )
-    quarantined = attach_evidence(quarantined, images, evidence_cap)
     reps_rows = clusters.filter(F.col("is_representative")).select(
         "image_id", "cluster_id", "is_representative"
     )
@@ -248,44 +228,19 @@ def split_verified(
 
 
 def attach_evidence(
-    quarantined: DataFrame, images: DataFrame | None, evidence_cap: int = 1 << 20
+    quarantined: DataFrame, images: DataFrame, evidence_cap: int = 1 << 20
 ) -> DataFrame:
-    """Left-join the failing member's bytes (size-capped) as evidence_bytes.
-    ``images=None`` keeps the column (null) so the QUARANTINE schema is
-    stable. Quarantine is rare by construction, so the broadcast-semi
-    filtered scan is a sliver of the corpus."""
-    if images is None:
-        return quarantined.withColumn("evidence_bytes", F.lit(None).cast("binary"))
-    # same isin pushdown as check_members' residual fetch: quarantine is rare
-    # by construction, so the literal id list lets parquet skip bytes pages
-    # instead of decompressing the full column for a semi-join. take(cap+1),
-    # never collect() — the driver must not hold an unbounded id list on the
-    # corrupt corpus the semi-join fallback exists for.
-    id_rows = [r.image_id for r in quarantined.select("image_id").distinct().take(100_001)]
-    if len(id_rows) <= 100_000:
-        src = images.filter(F.col("image_id").isin(id_rows))
-    else:
-        ids = quarantined.select("image_id").distinct()
-        src = images.join(F.broadcast(ids), "image_id", "left_semi")
-    ev = src.select(
+    """Left-join the failing member's bytes (size-capped at
+    ``evidence_cap``) as evidence_bytes — parity with the reference
+    preserving the mismatched record as a standalone
+    ``<hash>.orig-<id>.mboxrecord`` artifact (tbdedup/dedup/__init__.py:
+    146-149): the row alone reproduces the mismatch offline (decode
+    evidence_bytes, decode the rep via rep_id, recompute PSNR) without
+    re-running the join. Quarantine is rare by construction, so the bytes
+    fetch (``_fetch_bytes``) reads a sliver of the corpus."""
+    ids = quarantined.select("image_id").distinct()
+    ev = _fetch_bytes(images, ids).select(
         "image_id",
         F.when(F.length("bytes") <= evidence_cap, F.col("bytes")).alias("evidence_bytes"),
     )
     return quarantined.join(ev, "image_id", "left")
-
-
-def verify_members(
-    clusters: DataFrame,
-    images: DataFrame,
-    min_psnr_db: float = 40.0,
-    caption_tau: float = 0.5,
-) -> tuple[DataFrame, DataFrame]:
-    """One-call convenience: check (materialized once) + split.
-
-    COST NOTE: with no ``sigs`` parameter, check_members recomputes the
-    full signature relation INCLUDING the whole-corpus canonical pixel
-    decode. The pipeline (plans/pipeline.py stage H) calls the pair
-    directly with its committed ``sigs_ok`` to avoid that second decode —
-    do the same anywhere the signatures already exist."""
-    checked = check_members(clusters, images, min_psnr_db, caption_tau).localCheckpoint()
-    return split_verified(clusters, checked, images=images)

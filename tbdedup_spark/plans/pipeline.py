@@ -1,4 +1,4 @@
-"""The flagship pipeline: images → signatures → 3 detectors → union-find →
+"""The flagship pipeline: images → signatures → 4 detectors → union-find →
 verified clusters, every stage checkpointed + lineage-logged.
 
 Stage map (SURVEY §3 "our lifecycle"):
@@ -10,9 +10,8 @@ Stage map (SURVEY §3 "our lifecycle"):
   E detector: substr    substr.containment_pairs(index join + contains)
   F union of edges      unionByName + dropDuplicates
   G union-find          unionfind.connected_components (driver loop)
-  H verify + quarantine verify.check_members + split_verified (only stage
-                        re-touching bytes; verify.verify_members is the
-                        one-call convenience wrapper over the same pair)
+  H verify + quarantine verify.check_members, split_verified and
+                        attach_evidence (the only stage re-touching bytes)
 
 Each stage writes a parquet table under the run's warehouse dir and a lineage
 row; re-running the same config resumes after the last completed stage —
@@ -51,6 +50,9 @@ class DedupConfig:
     # and therefore config_run_id for EVERY pre-existing config, including
     # the default "" — warehouses committed before the field existed will
     # not resume (their run dirs are orphaned, recompute is safe but full).
+    # Removing minhash_salt_chunks (now minhash.SALT_CHUNKS = 8) and
+    # substr_winnow_w (always 1; the winnowing branch is gone) changed the
+    # run id the same way: warehouses committed with those fields recompute.
     dataset_id: str = ""
     shingle_k: int = 5
     n_perm: int = 16
@@ -60,16 +62,15 @@ class DedupConfig:
     phash_max_hamming: int = 7
     minhash_max_bucket: int = 64
     minhash_salt_cap: int = 1024   # buckets up to here: salted self-join
-    minhash_salt_chunks: int = 8
     # estimated-Jaccard prefilter before the exact verify join (fraction of
     # equal minhash coords); ~tau/2 = 3+ sigma below tau at n_perm=16, so
     # true pairs pass w.p. ~1-1e-5 while collision junk (J ~ 0.05) dies.
-    # CONTRACT NOTE: est_tau (with the crc32 hash + hash-set carry below)
-    # makes the pipeline's minhash detector probabilistic-recall, unlike the
-    # oracle-exact query path (md5 hash60, no prefilter): a true pair drops
-    # w.p. ~1e-5 and hash collisions can perturb scores near tau. Verified
-    # identical on the bench corpus; set minhash_est_tau=None (and pass
-    # hash_fn=None / carry="shingles") to restore exact recall.
+    # CONTRACT NOTE: est_tau (with the crc32 hash + int32 hash-set carry
+    # below) makes the pipeline's minhash detector probabilistic-recall,
+    # unlike the oracle-exact query path (md5 hash60, a prefilter DuckDB
+    # restates): a true pair drops w.p. ~1e-5 and crc32 collisions can
+    # perturb scores near tau. Verified identical on the bench corpus;
+    # minhash_est_tau=None removes the prefilter's share of that loss.
     minhash_est_tau: float | None = 0.3
     simhash_max_bucket: int = 1024
     # Containment-index knobs (operators/substr.py). The index shingle width
@@ -79,10 +80,8 @@ class DedupConfig:
     # the 75k-row bench corpus at 4 cores: k=5 36.6s, k=12+sample_mod=4
     # 10.8s, identical 12,278 pairs. sample_mod keeps only h%m==0
     # fingerprints (exact, containment-closed, ~m x smaller index);
-    # winnow_w=1 because positional winnowing's HOF selection measured +40s
-    # here for the same shrink.
+    # positional winnowing measured +40s here for the same shrink.
     substr_index_k: int = 12
-    substr_winnow_w: int = 1
     substr_sample_mod: int = 8
     min_psnr_db: float = 40.0
     seed: int = 42
@@ -152,13 +151,11 @@ def run_pipeline(
             tau=config.jaccard_tau, seed=config.seed,
             max_bucket=config.minhash_max_bucket,
             salt_cap=config.minhash_salt_cap,
-            salt_chunks=config.minhash_salt_chunks,
             hash_fn=text.hash32,  # throughput-grade; oracle queries pass md5
             est_tau=config.minhash_est_tau,
             # int sets, not strings/longs: the fat shuffle column, and the
             # bijective int32 fold keeps verify Jaccard exactly equal
             carry="hashes32",
-            hash_band_keys=True,  # 8-byte band join keys (see band_keys)
         )
         n_dropped = dropped.count()
         cat.log_metric("pairs_minhash", "dropped_buckets", n_dropped)
@@ -176,8 +173,7 @@ def run_pipeline(
     def _sub():
         return substr.containment_pairs(
             sigs_ok, "image_id", "caption",
-            k=config.substr_index_k, winnow_w=config.substr_winnow_w,
-            sample_mod=config.substr_sample_mod,
+            k=config.substr_index_k, sample_mod=config.substr_sample_mod,
         )
 
     # The four detectors are independent consumers of the signatures table —
@@ -235,7 +231,7 @@ def run_pipeline(
     # verified/quarantine splits read its parquet, never re-decoding
     checked = cat.stage(
         "verify_checked",
-        lambda: verify.check_members(clusters, images, config.min_psnr_db, sigs=sigs_ok),
+        lambda: verify.check_members(clusters, images, sigs_ok, config.min_psnr_db),
         "clusters",
     )
     cat.release_cached()
@@ -249,11 +245,8 @@ def run_pipeline(
             F.lit("decode_error").alias("reason"),
             F.lit(None).cast("double").alias("psnr_db"),
             F.lit(None).cast("double").alias("cap_sim"),
-            F.lit(None).cast("binary").alias("evidence_bytes"),
         )
-        allq = verify.attach_evidence(
-            quarantined.unionByName(decode_bad).drop("evidence_bytes"), images
-        )
+        allq = verify.attach_evidence(quarantined.unionByName(decode_bad), images)
         n_quarantined = cat.write(allq, "quarantine")
         cat.log_metric("verify", "quarantined", n_quarantined)
         return ok

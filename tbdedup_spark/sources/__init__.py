@@ -1,2 +1,2 @@
-"""Table sources & sinks: the run catalog (lineage/metrics/resume) and
-testdata loaders."""
+"""Table sources & sinks: the run catalog (lineage/metrics/resume) and the
+image container readers."""

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import math
 import os
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -73,6 +75,19 @@ def test_every_query_has_an_oracle():
     stages land their outputs as parquet for DuckDB). Lock that in: a new
     queries() entry without an oracle_sql() mirror is a regression."""
     assert set(entry_mod.oracle_sql()) == set(entry_mod.queries())
+
+
+def test_query_index_is_in_sync(tmp_path):
+    """QUERIES.md is generated from queries()/oracle_sql()/bench; a query
+    change that skips the regeneration is a stale index."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "QUERIES.md"
+    subprocess.run(
+        [sys.executable, os.path.join(root, "make_query_index.py"), str(out)],
+        check=True, cwd=tmp_path, capture_output=True,
+    )
+    with open(os.path.join(root, "QUERIES.md")) as committed:
+        assert out.read_text() == committed.read(), "run: python make_query_index.py"
 
 
 def test_entry_smoke(spark):

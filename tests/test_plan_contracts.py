@@ -110,3 +110,27 @@ def test_scan_filter_project_pushes_down(plans):
     p = plans["scan_filter_project"]
     assert "PushedFilters: [" in p
     assert "IsNotNull" in p or "GreaterThan" in p
+
+
+def test_tier_ladders_plan_no_anti_join(spark):
+    """Tier precedence is _tier_select's first-match CASE: neither tier
+    ladder anti-joins a later tier's id set against an earlier one's."""
+    from tbdedup_spark.operators import incremental
+
+    imgs = spark.createDataFrame(
+        [("n1", b"a", 1), ("n2", b"b", 2)], "image_id string, bytes binary, phash long"
+    )
+    hist = spark.createDataFrame(
+        [("h1", b"a", 1)], "image_id string, bytes binary, phash long"
+    )
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "a new doc")], "doc_id long, text string"
+    )
+    hdocs = spark.createDataFrame([(3, "the quick brown fox jumps")], "doc_id long, text string")
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    for name, df in (
+        ("tiered_image_dedup", incremental.tiered_image_dedup(imgs, hist)),
+        ("tiered_dedup", incremental.tiered_dedup(docs, hdocs, tau=0.6)),
+    ):
+        plan = df._jdf.queryExecution().explainString(mode)
+        assert "LeftAnti" not in plan, f"{name} plans an anti-join"

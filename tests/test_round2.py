@@ -1,6 +1,6 @@
 """Round-2 regression tests: the ADVICE.md contract bugs (short-doc
-containment, DECODE_ERROR sentinel collisions, salt_cap validation, winnowing
-recall), the est-Jaccard prefilter equivalence, prefix-filtered set-similarity
+containment, DECODE_ERROR sentinel collisions, salt_cap validation, sampled
+index recall), the est-Jaccard prefilter equivalence, prefix-filtered set-similarity
 join, durable union-find checkpoint/resume, and quarantine evidence."""
 
 import numpy as np
@@ -9,12 +9,12 @@ from pyspark.sql import functions as F
 
 from tbdedup_spark import codecs, synth
 from tbdedup_spark.functions import text
-from tbdedup_spark.operators import minhash, setsim, substr, unionfind, verify
+from tbdedup_spark.operators import exact, minhash, setsim, substr, unionfind, verify
 from tbdedup_spark.plans.pipeline import DedupConfig, run_pipeline
 from tbdedup_spark.sources.catalog import Catalog
 
 
-# --- substring containment: short docs + winnowing ---------------------------
+# --- substring containment: short docs + sampled index -----------------------
 
 
 def _doc_df(spark, rows):
@@ -42,10 +42,10 @@ SHORT_ROWS = [
 ]
 
 
-@pytest.mark.parametrize("w", [1, 4])
-def test_containment_short_docs(spark, w):
+@pytest.mark.parametrize("m", [1, 4])
+def test_containment_short_docs(spark, m):
     df = _doc_df(spark, SHORT_ROWS)
-    got = {(r.a_id, r.b_id) for r in substr.containment_pairs(df, winnow_w=w).collect()}
+    got = {(r.a_id, r.b_id) for r in substr.containment_pairs(df, sample_mod=m).collect()}
     assert got == _brute_contain(SHORT_ROWS)
 
 
@@ -55,10 +55,10 @@ def test_containment_sa_short_docs(spark):
     assert got == _brute_contain(SHORT_ROWS)
 
 
-def test_winnowed_containment_exact_vs_brute_random(spark):
-    """Classic-winnowing index + own-fingerprint-min probe is COMPLETE (not
+def test_sampled_containment_exact_vs_brute_random(spark):
+    """The mod-sampled index + rarest-fingerprint probe is COMPLETE (not
     probabilistic): on a random corpus with planted containments at adversarial
-    offsets, winnow_w=5 must equal brute force exactly."""
+    offsets, sample_mod=5 must equal brute force exactly."""
     rng = np.random.default_rng(7)
     alpha = "abcdefgh"
     rows = []
@@ -66,7 +66,6 @@ def test_winnowed_containment_exact_vs_brute_random(spark):
         s = "".join(alpha[j] for j in rng.integers(0, len(alpha), int(rng.integers(9, 40))))
         rows.append((f"r{i:03d}", s))
     # planted: substrings at random offsets, including suffix-end positions
-    # (the old probe-global-min scheme missed mins shadowed near the tail)
     for i in range(60):
         _, host = rows[int(rng.integers(0, 120))]
         if len(host) < 10:
@@ -75,7 +74,7 @@ def test_winnowed_containment_exact_vs_brute_random(spark):
         hi = lo + int(rng.integers(9, len(host) - lo + 1))
         rows.append((f"p{i:03d}", host[lo:hi]))
     df = _doc_df(spark, rows)
-    got = {(r.a_id, r.b_id) for r in substr.containment_pairs(df, k=5, winnow_w=5).collect()}
+    got = {(r.a_id, r.b_id) for r in substr.containment_pairs(df, k=5, sample_mod=5).collect()}
     assert got == _brute_contain(rows)
 
 
@@ -88,29 +87,6 @@ def test_containment_mod_sampling_exact(spark, images, golden, m):
     got = {(r.a_id, r.b_id) for r in pairs.collect()}
     oracle = {(a, b) for a, b, d, _ in golden["pairs"] if d == "substr"}
     assert got == oracle
-
-
-def test_winnowed_index_is_smaller(spark, images):
-    """The point of winnowing: the index must shrink vs winnow_w=1."""
-    base = images.select(F.col("image_id").alias("_id"), text.norm_text("caption").alias("_norm"))
-    h = substr._exploded_hashes(base, "_id", "_norm", 5)
-    full = h.select("_id", "_h").dropDuplicates(["_id", "_h"]).count()
-    pairs = substr.containment_pairs(images, winnow_w=4)  # smoke the plan
-    assert pairs.count() >= 0
-    w = 4
-    keyed = h.withColumn("_key", F.struct(F.col("_h"), (-F.col("_i")).alias("_ni")))
-    from pyspark.sql import Window
-    cnt_w = Window.partitionBy("_id")
-    fwd = Window.partitionBy("_id").orderBy("_i").rowsBetween(0, w - 1)
-    bwd = Window.partitionBy("_id").orderBy("_i").rowsBetween(-(w - 1), 0)
-    keyed = keyed.withColumn("_n", F.count(F.lit(1)).over(cnt_w)).withColumn(
-        "_wkey", F.when(F.col("_i") <= F.col("_n") - w, F.min("_key").over(fwd))
-    )
-    kept = (
-        keyed.withColumn("_sel", F.max("_wkey").over(bwd) == F.col("_key"))
-        .filter("_sel").select("_id", "_h").dropDuplicates(["_id", "_h"]).count()
-    )
-    assert kept < full * 0.6, f"winnowed index {kept} not <60% of full {full}"
 
 
 # --- minhash: est-J prefilter + salt_cap validation ---------------------------
@@ -281,7 +257,7 @@ def test_empty_captions_carry_no_dup_evidence(spark, images):
         [(rep, rep, True), (mem, rep, False)],
         "image_id string, cluster_id string, is_representative boolean",
     )
-    checked = verify.check_members(clusters, blank)
+    checked = verify.check_members(clusters, blank, exact.signatures(blank))
     row = checked.filter(F.col("image_id") == mem).collect()[0]
     assert row.cap_sim == 0.0 and not row.cap_contain
     # pixel-distinct fixtures -> the PSNR proof must fail -> quarantined

@@ -5,8 +5,10 @@ sf0.01 oracle equality of test_entry_oracle.py."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from tbdedup_spark.functions import text
 from tbdedup_spark.operators import ann, incremental, minhash
 
 
@@ -53,7 +55,6 @@ def test_tiered_near_matches_allpairs_filter(spark):
     tau = 0.6
     full, _ = minhash.minhash_pairs(
         new_df.unionByName(hist_df), "doc_id", "text", tau=tau, max_bucket=None,
-        checkpoint=False,
     )
     new_ids = {100, 101, 102, 103}
     cross_near = {
@@ -90,13 +91,13 @@ def test_tiered_dedup_broadcast_guard_is_plan_only(spark):
     """The guarded broadcast hints (review catch: an oversized batch must
     degrade to AQE-decided joins, not a forced-broadcast OOM) change the
     physical plan only: verdicts are identical with the hints forced off
-    (threshold=0 — every bound exceeds it), forced on (None — the uncounted
-    small-batch contract), and at the default."""
+    (threshold=0 — every bound exceeds it), forced on (a threshold no
+    bound reaches), and at the default."""
     new_df, hist_df = _tiered_corpus(spark)
     want = sorted(
         map(tuple, incremental.tiered_dedup(new_df, hist_df, tau=0.6).collect())
     )
-    for thr in (0, None):
+    for thr in (0, 10**12):
         got = sorted(
             map(
                 tuple,
@@ -106,6 +107,21 @@ def test_tiered_dedup_broadcast_guard_is_plan_only(spark):
             )
         )
         assert got == want, thr
+
+
+def test_tiered_dedup_rejects_mismatched_history_sigs(spark):
+    """hist_mh_sigs must be a minhash_signatures(carry="hashes") relation:
+    a narrower signature or the pipeline's int32 sets would never match the
+    operator's bands/sets, so both raise instead of reading 'unique'."""
+    new_df, hist_df = _tiered_corpus(spark)
+    narrow = minhash.minhash_signatures(hist_df, "doc_id", "text", n_perm=8)
+    with pytest.raises(ValueError, match="mh8"):
+        incremental.tiered_dedup(new_df, hist_df, tau=0.6, hist_mh_sigs=narrow)
+    int_sets = minhash.minhash_signatures(
+        hist_df, "doc_id", "text", hash_fn=text.hash32, carry="hashes32"
+    )
+    with pytest.raises(ValueError, match="array<bigint>"):
+        incremental.tiered_dedup(new_df, hist_df, tau=0.6, hist_mh_sigs=int_sets)
 
 
 # --- SemDeDup -----------------------------------------------------------------

@@ -16,9 +16,7 @@ def _banded(spark, n_hot, n_cold):
 def test_salted_bucket_pairs_complete(spark):
     """Salted regime must produce exactly the full within-bucket pair set."""
     banded = _banded(spark, n_hot=60, n_cold=10)
-    pairs, dropped = minhash.candidate_pairs(
-        banded, max_bucket=16, salt_cap=128, salt_chunks=4
-    )
+    pairs, dropped = minhash.candidate_pairs(banded, max_bucket=16, salt_cap=128)
     got = {(r.a_id, r.b_id) for r in pairs.collect()}
     hot_ids = sorted(f"h{i:04d}" for i in range(60))
     expect = {(a, b) for i, a in enumerate(hot_ids) for b in hot_ids[i + 1 :]}
@@ -28,9 +26,7 @@ def test_salted_bucket_pairs_complete(spark):
 
 def test_oversized_bucket_dropped_and_reported(spark):
     banded = _banded(spark, n_hot=200, n_cold=5)
-    pairs, dropped = minhash.candidate_pairs(
-        banded, max_bucket=16, salt_cap=128, salt_chunks=4
-    )
+    pairs, dropped = minhash.candidate_pairs(banded, max_bucket=16, salt_cap=128)
     assert pairs.count() == 0  # hot bucket over salt_cap, cold are singletons
     d = dropped.collect()
     assert len(d) == 1 and d[0].bucket_size == 200  # reported, not silent
