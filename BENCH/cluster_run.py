@@ -125,15 +125,6 @@ def main() -> None:
     n_clusters = out["clusters"].select("cluster_id").distinct().count()
     wall = time.time() - t0
 
-    # persist the trial wall next to the per-stage metrics so an interrupted
-    # harness can be re-aggregated without re-running completed trials
-    # (BENCH/scaling_salvage.py reads key='pipeline_wall_s')
-    from tbdedup_spark.sources.catalog import Catalog
-
-    Catalog(spark, args.warehouse, out["run_id"]).log_metric(
-        "pipeline", "pipeline_wall_s", wall
-    )
-
     print(json.dumps({
         "executors": n_exec,
         "cores": args.cores_max,

@@ -58,7 +58,7 @@ def _wait_port(port: int, timeout: float = 60.0) -> None:
 def write_baseline_md(md: str) -> None:
     """Write the scaling section of BENCH/BASELINE.md, preserving every
     hand-maintained section at/after the appendix marker (bench methodology,
-    SF curve). Shared by cluster_scaling and scaling_merge."""
+    SF curve)."""
     mark = "## Bench methodology"
     path = os.path.join(BENCH_DIR, "BASELINE.md")
     appendix = ""

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import text
-from ..plans.partitioning import fan_out_small_scan
+from ..plans.partitioning import cap_hot_keys, fan_out_small_scan
 
 
 def edit_distance_pairs(
@@ -89,18 +89,12 @@ def edit_distance_pairs(
         .dropDuplicates(["_id", "_h"])
     )
     if checkpoint:
-        # The anchor relation feeds FOUR consumers (the hot-gram frequency
-        # count plus both self-join sides, each re-deriving the cap) —
-        # without this the md5-gram explode re-executes four times
-        # (measured in .explain: four identical Generate+md5 subtrees).
-        # Opt out for single-pass/small inputs (the simhash/setsim knob
-        # convention).
+        # The anchor relation feeds two consumers (the hot-gram cap's size
+        # groupBy and join, or both self-join sides when uncapped) — without
+        # this the md5-gram explode re-executes per consumer. Opt out for
+        # single-pass/small inputs (the simhash/setsim knob convention).
         anchors = anchors.localCheckpoint()
-    if anchor_cap is not None:
-        freq = anchors.groupBy("_h").agg(F.count(F.lit(1)).alias("_df"))
-        anchors = (
-            anchors.join(freq, "_h").filter(F.col("_df") <= anchor_cap).drop("_df")
-        )
+    anchors, _ = cap_hot_keys(anchors, ["_h"], anchor_cap)
 
     a = anchors.select(
         F.col("_id").alias("a_id"), F.col("_n").alias("_na"), "_h"

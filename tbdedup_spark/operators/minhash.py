@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text
-from ..plans.partitioning import fan_out_small_scan
+from ..plans.partitioning import cap_hot_keys, fan_out_small_scan
 
 SALT_CHUNKS = 8  # salted regime: chunk ids per hot bucket (~S(S+1)/2 join cells)
 
@@ -238,9 +238,8 @@ def candidate_pairs(
       caption-signature detector's star edges. Never silent.
     """
     if max_bucket is not None and max_bucket < 1:
-        # 0 would keep no bucket AND skip the salted regime's truthiness
-        # gate below — silent total pair loss, not "drop everything
-        # loudly" (review catch; same rule as simhash_pairs)
+        # checked here, not only in cap_hot_keys: with salt_cap set the
+        # shared cap sees salt_cap, and 0 would empty the plain regime
         raise ValueError(f"max_bucket must be >= 1 or None (uncapped), got {max_bucket}")
     if salt_cap is not None and max_bucket is not None and salt_cap <= max_bucket:
         raise ValueError(
@@ -263,41 +262,12 @@ def candidate_pairs(
             cols.append(F.col("_mh").alias(mhn))
         return df.select(*cols)
 
-    if max_bucket is None:
-        # Uncapped (oracle) mode: no regime can apply — the plain band-key
-        # self-join needs no bucket sizes at all, so skip the groupBy + join
-        # + checkpoint below entirely. That machinery on this single-consumer
-        # path was a pure-latency materialization of the whole banded
-        # relation (measured: dedup_clusters 44.7s -> 73.0s when it ran
-        # unconditionally; restored by this branch).
-        empty_sized = banded.limit(0).withColumn("_bsz", F.lit(0).cast("long"))
-        dropped = empty_sized.groupBy("band_idx", "band_key").agg(
-            F.max("_bsz").alias("bucket_size")
-        )
-        pairs = (
-            _side(banded, "a_id", "_mha")
-            .join(_side(banded, "b_id", "_mhb"), ["band_idx", "band_key"])
-            .filter(F.col("a_id") < F.col("b_id"))
-        )
-        if carry:
-            pairs = pairs.filter(_est >= est_tau)
-        return pairs.select("a_id", "b_id").dropDuplicates(["a_id", "b_id"]), dropped
-
-    # Bucket sizes via groupBy+join, NOT a window: Window.partitionBy(bucket)
-    # would place an entire hot bucket on one task (the thing that OOMs at
-    # 10^12 rows); groupBy gets map-side partial aggregation and the join is
-    # AQE-skew-splittable. Materialized once: all three regimes and the
-    # dropped-bucket report derive from this relation.
-    bsz = banded.groupBy("band_idx", "band_key").agg(F.count(F.lit(1)).alias("_bsz"))
-    sized = banded.join(bsz, ["band_idx", "band_key"]).localCheckpoint()
-    drop_over = salt_cap or max_bucket
-    dropped = (
-        sized.filter(F.col("_bsz") > drop_over)
-        .groupBy("band_idx", "band_key")
-        .agg(F.max("_bsz").alias("bucket_size"))
+    # one sizing pass feeds all three regimes and the dropped report
+    salted = max_bucket is not None and salt_cap is not None
+    sized, dropped = cap_hot_keys(
+        banded, ["band_idx", "band_key"], salt_cap if salted else max_bucket
     )
-
-    kept = sized.filter(F.col("_bsz") <= max_bucket)
+    kept = sized.filter(F.col("_bsz") <= max_bucket) if salted else sized
     pairs = (
         _side(kept, "a_id", "_mha")
         .join(_side(kept, "b_id", "_mhb"), ["band_idx", "band_key"])
@@ -307,10 +277,10 @@ def candidate_pairs(
         pairs = pairs.filter(_est >= est_tau)
     pairs = pairs.select("a_id", "b_id")
 
-    if max_bucket and salt_cap and salt_cap > max_bucket:
-        hot = sized.filter(
-            (F.col("_bsz") > max_bucket) & (F.col("_bsz") <= salt_cap)
-        ).withColumn("_chunk", F.pmod(F.xxhash64("_id"), F.lit(SALT_CHUNKS)))
+    if salted:
+        hot = sized.filter(F.col("_bsz") > max_bucket).withColumn(
+            "_chunk", F.pmod(F.xxhash64("_id"), F.lit(SALT_CHUNKS))
+        )
         # left side replicated to every chunk >= its own; right side keyed
         # by its own chunk -> join cell (band, cb) holds chunk pair (ca, cb)
         chunks = F.array(*[F.lit(j) for j in range(SALT_CHUNKS)])

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .. import codecs
+from ..plans.partitioning import cap_hot_keys
 
 IMAGE_FEATURES = T.StructType(
     [
@@ -667,13 +668,10 @@ def crop_resistant_near_dups(
     sigs = crop_patch_signatures(images, id_col, bytes_col)
     sigs, checkpoint = _land_or_checkpoint(sigs, sigs_out_path)
     if checkpoint:
-        sigs = sigs.localCheckpoint()  # feeds counts + both join sides
+        sigs = sigs.localCheckpoint()  # feeds the counts and the cap
 
     cnt = sigs.groupBy("image_id").agg(F.count(F.lit(1)).alias("_n"))
-    kept = sigs
-    if max_bucket is not None:
-        freq = sigs.groupBy("psig").agg(F.count(F.lit(1)).alias("_c"))
-        kept = sigs.join(freq, "psig").filter(F.col("_c") <= max_bucket).drop("_c")
+    kept, _ = cap_hot_keys(sigs, ["psig"], max_bucket)
     a = kept.select(F.col("image_id").alias("a_id"), "psig")
     b = kept.select(F.col("image_id").alias("b_id"), "psig")
     pairs = (

@@ -25,19 +25,21 @@ by the suffix mass (~(1−τ)·|tokens| fewer rows at τ=0.5, more at higher τ)
 The window partition key is the doc id — bounded by doc length, so no
 hot-key risk (the repo's window convention, operators/asof.py:10-12).
 
-Skew valve (the reference-analog standard the other detectors meet,
-operators/minhash.py:179-191): a universal prefix token (stopword that
-survives into prefixes of short docs) creates a quadratic postings join.
-``prefix_cap`` drops tokens whose postings list exceeds the cap from the
-candidate join — dropped AND reported via the second returned relation,
-never silent. Recall is only lost for pairs whose EVERY shared prefix token
-is hot; precision is untouched (the exact verify runs regardless).
+Skew valve (the shared hot-key cap, plans/partitioning.cap_hot_keys): a
+universal prefix token (stopword that survives into prefixes of short docs)
+creates a quadratic postings join. ``prefix_cap`` drops tokens whose
+postings list exceeds the cap from the candidate join — dropped AND
+reported via the second returned relation, never silent. Recall is only
+lost for pairs whose EVERY shared prefix token is hot; precision is
+untouched (the exact verify runs regardless).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..plans.partitioning import cap_hot_keys
 
 
 def jaccard_pairs(
@@ -61,11 +63,11 @@ def jaccard_pairs(
 
     ``checkpoint``: materialize the prefix relation before it fans out
     (mirrors simhash_pairs' knob, ADVICE r4). Default True — the prefix
-    subtree is consumed by both candidate self-join sides (plus the postings
-    groupBy in capped mode) without exchange reuse. Set False on uncapped
-    single-shot paths where the upstream is a plain table scan: the repo's
-    own audit measured the eager materialization as ~5% pure overhead at
-    sf0.1 there (BENCH/PLANS.md round-4 self-review).
+    subtree is consumed twice (both candidate self-join sides, or in capped
+    mode the cap's size groupBy and join) without exchange reuse. Set False
+    on uncapped single-shot paths where the upstream is a plain table scan:
+    the repo's own audit measured the eager materialization as ~5% pure
+    overhead at sf0.1 there (BENCH/PLANS.md round-4 self-review).
     """
     blocks = list(block_cols)
     docs = df.select(
@@ -89,30 +91,18 @@ def jaccard_pairs(
         .select("_id", *blocks, "_tok", "_sz", "_rn")
     )
     # the prefix subtree (explode + freq join + per-doc window) is consumed
-    # by both candidate self-join sides — plus the postings groupBy and cap
-    # filter in prefix_cap mode — and Spark does not reuse exchanges across
-    # those consumers (the measured premise of simhash_pairs' checkpoint):
-    # one narrow materialization runs the tokenize/window stage once
+    # twice — by both candidate self-join sides, or by the cap's size
+    # groupBy and join in prefix_cap mode — and Spark does not reuse
+    # exchanges across those consumers (the measured premise of
+    # simhash_pairs' checkpoint): one narrow materialization runs the
+    # tokenize/window stage once
     if checkpoint:
         prefix = prefix.localCheckpoint()
 
-    if prefix_cap is not None:
-        postings = prefix.groupBy("_tok", *blocks).agg(
-            F.count(F.lit(1)).alias("postings")
-        )
-        dropped = postings.filter(F.col("postings") > prefix_cap).select(
-            F.col("_tok").alias("token"), *blocks, "postings"
-        )
-        prefix = prefix.join(
-            postings.filter(F.col("postings") <= prefix_cap).select("_tok", *blocks),
-            ["_tok", *blocks],
-        )
-    else:
-        dropped = (
-            prefix.limit(0)
-            .select(F.col("_tok").alias("token"), *blocks)
-            .withColumn("postings", F.lit(0).cast("long"))
-        )
+    prefix, dropped = cap_hot_keys(prefix, ["_tok", *blocks], prefix_cap)
+    dropped = dropped.select(
+        F.col("_tok").alias("token"), *blocks, F.col("bucket_size").alias("postings")
+    )
 
     # PPJoin prunes INSIDE the candidate join (Xiao et al. 2008, public —
     # both are necessary conditions for J >= tau, so candidates stay an

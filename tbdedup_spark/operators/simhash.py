@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text
-from ..plans.partitioning import fan_out_small_scan
+from ..plans.partitioning import cap_hot_keys, fan_out_small_scan
 
 
 def hamming_bands(
@@ -55,17 +55,12 @@ def simhash_pairs(
     """(pairs, dropped_buckets). Completeness: guaranteed for
     max_hamming <= n_bands - 1 (pigeonhole); the residual filter enforces the
     exact bound either way. Hot buckets (e.g. flat images all hashing to 0)
-    are size-capped and reported, as in minhash.candidate_pairs.
-
-    ``max_bucket=None`` (oracle mode) takes a fast path with NO bucket-size
-    machinery: the plain band-key self-join needs no sizes, so the groupBy +
-    join + localCheckpoint of the SIZED relation would be a pure-latency
-    materialization — the identical dead cost removed from
-    minhash.candidate_pairs (operators/minhash.py:214-232).
+    are size-capped and reported by ``plans.partitioning.cap_hot_keys``;
+    ``max_bucket=None`` (oracle mode) sizes nothing.
 
     ``checkpoint=True`` materializes the narrow banded relation (id, sig,
     band_idx, band_bits) before it fans out. The banded subtree is consumed
-    2-3x (both self-join sides; plus the size groupBy in capped mode) and
+    twice (both self-join sides, or the cap's size groupBy and join) and
     Spark does NOT reuse the exchanges across those consumers (measured:
     the two join sides' shuffles don't canonicalize equal — text_simhash
     upstream ran twice, 8.5s vs 2.8s with the checkpoint at sf0.1). Set it
@@ -77,31 +72,10 @@ def simhash_pairs(
         # ValueError, not assert: -O would strip an assert and silently
         # miss pairs beyond the pigeonhole bound (review catch)
         raise ValueError(f"pigeonhole completeness needs max_hamming < n_bands, got {max_hamming} >= {n_bands}")
-    if max_bucket is not None and max_bucket < 1:
-        # 0 is not "drop everything" and must not silently alias the
-        # uncapped fast path (ADVICE r4): reject it loudly
-        raise ValueError(f"max_bucket must be >= 1 or None (uncapped), got {max_bucket}")
     banded = hamming_bands(df, id_col, sig_col, n_bands, width)
     if checkpoint:
         banded = banded.localCheckpoint()
-    if max_bucket is None:
-        empty = banded.limit(0).withColumn("_bsz", F.lit(0).cast("long"))
-        dropped = empty.groupBy("band_idx", "band_bits").agg(
-            F.max("_bsz").alias("bucket_size")
-        )
-        kept = banded
-    else:
-        # groupBy+join, not a window — a window over a hot bucket is one task
-        # (see minhash.candidate_pairs). One materialization feeds both
-        # self-join sides + the dropped report.
-        bsz = banded.groupBy("band_idx", "band_bits").agg(F.count(F.lit(1)).alias("_bsz"))
-        sized = banded.join(bsz, ["band_idx", "band_bits"]).localCheckpoint()
-        dropped = (
-            sized.filter(F.col("_bsz") > max_bucket)
-            .groupBy("band_idx", "band_bits")
-            .agg(F.max("_bsz").alias("bucket_size"))
-        )
-        kept = sized.filter(F.col("_bsz") <= max_bucket)
+    kept, dropped = cap_hot_keys(banded, ["band_idx", "band_bits"], max_bucket)
     a = kept.select(F.col("_id").alias("a_id"), F.col("_sig").alias("_siga"), "band_idx", "band_bits")
     b = kept.select(F.col("_id").alias("b_id"), F.col("_sig").alias("_sigb"), "band_idx", "band_bits")
     pairs = (

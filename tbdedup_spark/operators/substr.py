@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import text
-from ..plans.partitioning import fan_out_small_scan
+from ..plans.partitioning import cap_hot_keys, fan_out_small_scan
 
 
 def _exploded_hashes(
@@ -305,8 +305,6 @@ def containment_pairs_sa(
     keeps the exact-output contract. At scale prefer the primary
     ``containment_pairs``, whose skew ladder handles this without loss.
     """
-    if max_bucket is not None and max_bucket < 1:
-        raise ValueError(f"max_bucket must be >= 1 or None (uncapped), got {max_bucket}")
     base = df.select(
         F.col(id_col).alias("_id"),
         text.norm_text(text_col).alias("_norm"),
@@ -324,12 +322,9 @@ def containment_pairs_sa(
         .join(base, "_id")
         .select("_id", "_norm", "_bkt")
     )
-    members = probe.unionByName(longs).dropDuplicates(["_bkt", "_id"])
-    if max_bucket is not None:
-        sized = members.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_bsz"))
-        members = members.join(
-            sized.filter(F.col("_bsz") <= max_bucket).select("_bkt"), "_bkt", "left_semi"
-        )
+    members, _ = cap_hot_keys(
+        probe.unionByName(longs).dropDuplicates(["_bkt", "_id"]), ["_bkt"], max_bucket
+    )
     sa_pairs = (
         members.groupBy("_bkt")
         .applyInPandas(lambda pdf: _sa_bucket(pdf), schema=_SA_SCHEMA)

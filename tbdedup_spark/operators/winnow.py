@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tbdedup_spark.functions import text
-from tbdedup_spark.plans.partitioning import fan_out_small_scan
+from tbdedup_spark.plans.partitioning import cap_hot_keys, fan_out_small_scan
 
 POS_ENC = 4_294_967_296  # 2^32: (hash, pos) packed into one orderable int64
 
@@ -124,11 +124,10 @@ def winnow_dup_pairs(
     """
     if not (0.0 < tau <= 1.0):
         raise ValueError(f"tau must be in (0, 1], got {tau}")
-    if df_cap < 1 or min_shared < 1:
-        raise ValueError(f"df_cap and min_shared must be >= 1")
+    if min_shared < 1:
+        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     # One narrow materialization: the fingerprint subtree (explode + per-doc
-    # window + distinct) fans out to FOUR consumers (the df-cap aggregate,
-    # both pair-join sides via `kept`, and the per-doc set sizes) and Spark
+    # window + distinct) feeds the df cap's size groupBy and join, and Spark
     # does not reuse exchanges across them — the r6 plan audit measured the
     # whole subtree re-executing per consumer (8 scans/8 windows in one plan,
     # plans/r06/winnow_dup_pairs_before.txt). (id, fp) is 16 bytes/row.
@@ -138,13 +137,7 @@ def winnow_dup_pairs(
         .distinct()
         .localCheckpoint()
     )
-    rare = (
-        sets.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("dfreq"))
-        .filter(F.col("dfreq") <= df_cap)
-        .select("fp")
-    )
-    kept = sets.join(rare, "fp")
+    kept, _ = cap_hot_keys(sets, ["fp"], df_cap)
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("nfp"))
     a = kept.select(F.col("fp"), F.col(id_col).alias("id_a"))
     b = kept.select(F.col("fp"), F.col(id_col).alias("id_b"))

@@ -1,4 +1,6 @@
-"""Scan-parallelism repair for small unsplittable inputs.
+"""Partitioning policy: scan fan-out and the hot-key cap.
+
+Scan-parallelism repair for small unsplittable inputs.
 
 Heavy per-row map stages (shingle explode + md5, regex extraction chains,
 higher-order-function aggregates) run at the SCAN's parallelism. A small
@@ -17,11 +19,17 @@ full-corpus shuffle at 100 TB (guide §2.4: remove shuffles outright; §6:
 input split sizing). The keyless round-robin repartition is retry-safe:
 ``spark.sql.execution.sortBeforeRepartition`` (default on) pins the
 row-to-partition assignment under task retries (SPARK-23207).
+
+``cap_hot_keys`` is the one skew valve of every bucketed self-join (band,
+postings, anchor and fingerprint joins): a join key shared by ``n`` rows
+builds ``n^2/2`` pairs in one task, so groups above a cap are dropped from
+the join and reported, never silently lost.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def fan_out_small_scan(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -49,3 +57,37 @@ def fan_out_small_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     except Exception:
         return df  # exotic plan the RDD conversion rejects — leave it alone
     return df.repartition(target) if n < target else df
+
+
+def cap_hot_keys(
+    rel: DataFrame, keys: list[str], cap: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """(kept, dropped): the rows of ``rel`` whose ``keys`` group holds at
+    most ``cap`` rows, and one ``(*keys, bucket_size)`` row per larger group.
+
+    ``cap=None`` is the uncapped (oracle) mode: ``rel`` comes back untouched
+    with an empty report and no sizing runs — the groupBy + join +
+    checkpoint below is a pure-latency materialization when nothing is
+    dropped (measured: dedup_clusters 44.7s -> 73.0s when it ran
+    unconditionally). A cap below 1 raises: it would silently keep nothing.
+
+    Otherwise ``kept`` carries the group size as ``_bsz`` (callers may split
+    further on it, as minhash's salted regime does). Sizes come from a
+    groupBy + join, NOT a window: ``Window.partitionBy(key)`` places a whole
+    hot group on one task, the thing the cap exists to prevent; the groupBy
+    combines map-side and the join is AQE-skew-splittable. The sized
+    relation is materialized once, so both self-join sides and the report
+    read it without re-running ``rel``'s upstream.
+    """
+    if cap is None:
+        return rel, rel.select(*keys, F.lit(0).cast("long").alias("bucket_size")).limit(0)
+    if cap < 1:
+        raise ValueError(f"hot-key cap must be >= 1 or None (uncapped), got {cap}")
+    sizes = rel.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bsz"))
+    sized = rel.join(sizes, keys).localCheckpoint()
+    dropped = (
+        sized.filter(F.col("_bsz") > cap)
+        .groupBy(*keys)
+        .agg(F.max("_bsz").alias("bucket_size"))
+    )
+    return sized.filter(F.col("_bsz") <= cap), dropped

@@ -10,6 +10,8 @@ scale — that's the point of AQE)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -43,12 +45,15 @@ LANDED = {
 }
 
 
-def _plan(spark, name: str) -> str:
-    df = entry_mod.queries()[name](spark, SF)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+def _formatted(df) -> str:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     return df._jdf.queryExecution().explainString(mode)
+
+
+def _plan(spark, name: str) -> str:
+    return _formatted(entry_mod.queries()[name](spark, SF))
 
 
 @pytest.fixture(scope="module")
@@ -134,3 +139,17 @@ def test_tier_ladders_plan_no_anti_join(spark):
     ):
         plan = df._jdf.queryExecution().explainString(mode)
         assert "LeftAnti" not in plan, f"{name} plans an anti-join"
+
+
+def test_uncapped_band_joins_size_nothing(spark, plans):
+    """max_bucket=None is the oracle fast path: the band self-join runs with
+    no bucket-size aggregate. The pattern does match the sizing aggregate of
+    a capped run's dropped-bucket report."""
+    from tbdedup_spark.operators import simhash
+
+    band_agg = re.compile(r"Keys \[\d+\]: \[band_idx")
+    for name in ("minhash_lsh_pairs", "simhash_hamming_pairs"):
+        assert not band_agg.search(plans[name]), f"{name} sizes its band buckets"
+    df = spark.createDataFrame([(1, 0), (2, 0)], "id long, sig long")
+    _, dropped = simhash.simhash_pairs(df, "id", "sig", max_bucket=1)
+    assert band_agg.search(_formatted(dropped))

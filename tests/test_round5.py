@@ -1,7 +1,6 @@
 """Round-5 regression tests: the 16-bit uncapped near-dup guard, the salted
-top-k equivalence on a power-law key, the setsim checkpoint knob, the
-probe-table decontamination join, and the simhash max_bucket validation
-(VERDICT/ADVICE round-4 items)."""
+top-k equivalence on a power-law key, the setsim checkpoint knob and the
+probe-table decontamination join (VERDICT/ADVICE round-4 items)."""
 
 import random
 
@@ -9,7 +8,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from tbdedup_spark.operators import ann, setsim, simhash, topk
+from tbdedup_spark.operators import ann, setsim, topk
 
 
 # --- uncapped near-dup size guard (VERDICT r4 task 4) ------------------------
@@ -42,15 +41,6 @@ def test_neardup_guard_ignored_when_capped_or_unset(spark):
     ann.neardup_pairs(
         df, "vec_id", "emb", tau=0.99, n_bits=16, dim=8, max_bucket=None
     ).count()
-
-
-# --- simhash max_bucket validation (ADVICE r4) -------------------------------
-
-
-def test_simhash_max_bucket_zero_rejected(spark):
-    df = spark.createDataFrame([(i, i * 3) for i in range(10)], "id long, sig long")
-    with pytest.raises(ValueError, match="max_bucket"):
-        simhash.simhash_pairs(df, "id", "sig", max_bucket=0)
 
 
 # --- salted top-k: row-identical on a power-law key (VERDICT r4 task 7) ------

@@ -1,9 +1,13 @@
 """Skew handling: the three bucket regimes of minhash.candidate_pairs
-(plain / salted / dropped+reported) — the north_rule's skew ladder."""
+(plain / salted / dropped+reported) — the north_rule's skew ladder — and
+the shared hot-key cap (plans.partitioning.cap_hot_keys) behind every
+bucketed self-join."""
 
-from pyspark.sql import functions as F
+import pytest
 
-from tbdedup_spark.operators import minhash
+from tbdedup_spark.operators import (
+    editdist, minhash, multimodal, setsim, simhash, substr, winnow,
+)
 
 
 def _banded(spark, n_hot, n_cold):
@@ -73,3 +77,53 @@ def test_setsim_hot_prefix_cap_reported(spark):
     assert "zzz" in rep and rep["zzz"] > 8  # reported, never silent
     # precision untouched: capped pairs are a subset of the exact pairs
     assert got <= {(r.a_id, r.b_id) for r in exact.collect()}
+
+
+# --- the shared hot-key cap ---------------------------------------------------
+
+
+def test_simhash_oversized_bucket_dropped_and_reported(spark):
+    """N identical phashes share every band's bucket: with max_bucket < N no
+    pair survives, and each band reports its bucket with size N."""
+    n = 12
+    df = spark.createDataFrame([(i, 0x5A5A5A5A5A5A5A5A) for i in range(n)], "id long, sig long")
+    pairs, dropped = simhash.simhash_pairs(df, "id", "sig", n_bands=8, max_bucket=n - 1)
+    assert pairs.count() == 0
+    rep = dropped.collect()
+    assert sorted(r.band_idx for r in rep) == list(range(8))
+    assert {r.bucket_size for r in rep} == {n}
+
+
+_CAP_SITES = {
+    "candidate_pairs": lambda s, cap: minhash.candidate_pairs(
+        s.createDataFrame([], "_id string, band_idx int, band_key string"), max_bucket=cap
+    ),
+    "simhash_pairs": lambda s, cap: simhash.simhash_pairs(
+        s.createDataFrame([], "id long, sig long"), "id", "sig", max_bucket=cap
+    ),
+    "containment_pairs_sa": lambda s, cap: substr.containment_pairs_sa(
+        s.createDataFrame([], "id string, text string"), "id", "text", max_bucket=cap
+    ),
+    "jaccard_pairs": lambda s, cap: setsim.jaccard_pairs(
+        s.createDataFrame([], "doc_id string, toks array<string>"), "doc_id", "toks", 0.5,
+        prefix_cap=cap,
+    ),
+    "edit_distance_pairs": lambda s, cap: editdist.edit_distance_pairs(
+        s.createDataFrame([], "doc_id string, text string"), "doc_id", "text", anchor_cap=cap
+    ),
+    "crop_resistant_near_dups": lambda s, cap: multimodal.crop_resistant_near_dups(
+        s.createDataFrame([], "image_id string, bytes binary"), max_bucket=cap
+    ),
+    "winnow_dup_pairs": lambda s, cap: winnow.winnow_dup_pairs(
+        s.createDataFrame([], "doc_id string, norm string"), df_cap=cap
+    ),
+}
+
+
+@pytest.mark.parametrize("cap", [0, -1])
+@pytest.mark.parametrize("site", sorted(_CAP_SITES))
+def test_cap_below_one_rejected(spark, site, cap):
+    """Every bucketed self-join rejects a cap below 1: it would keep no
+    bucket, and it must not read as the uncapped mode either."""
+    with pytest.raises(ValueError, match=">= 1"):
+        _CAP_SITES[site](spark, cap)
