@@ -1,19 +1,31 @@
-"""Distributed union-find: iterative smallest-id label propagation.
+"""Union-find: min-label connected components, finished on the driver when
+the graph is small and by iterative label propagation when it is not.
 
 The reference never needs this (its duplicates are exact-hash groups — a
 partition, not a graph); our three detectors emit *edges*, whose transitive
 closure defines the clusters. north_rule names the algorithm: iterative
 smallest-id label propagation via self-joins.
 
-Each iteration does two monotone steps (labels only ever decrease, so
-iterations are idempotent and safe to re-run — the property that makes the
-checkpoint/resume story sound):
+Two regimes, chosen by the edge count (observed in the one job that
+materializes the edge relation):
 
-1. neighbor propagation  l(v) ← min(l(v), min_{(u,v)∈E} l(u))   [join on edges]
-2. pointer jumping       l(v) ← min(l(v), l(l(v)))              [join labels]
+* LOCAL FINISH, below ``LOCAL_FINISH_EDGES`` edges: the edges come to the
+  driver through Arrow, union-find (union by min root, path halving —
+  vectorized over the edge list with numpy) labels them, and the labels go
+  back as an Arrow-built relation. At the flagship's scale every Spark job
+  is latency, so this replaces one job per propagation round with a fixed
+  handful: on the 640-row flagship corpus, 29 jobs became 4.
+* DISTRIBUTED LOOP, above it: each iteration does two monotone steps
+  (labels only ever decrease, so iterations are idempotent and safe to
+  re-run — the property that makes the checkpoint/resume story sound):
 
-Step 2 (path halving) makes chain-shaped components (caption-containment
-chains A ⊂ B ⊂ C…) converge in O(log diameter) instead of O(diameter).
+  1. neighbor propagation  l(v) ← min(l(v), min_{(u,v)∈E} l(u))   [join on edges]
+  2. pointer jumping       l(v) ← min(l(v), l(l(v)))              [join labels]
+
+  Step 2 (path halving) makes chain-shaped components (caption-containment
+  chains A ⊂ B ⊂ C…) converge in O(log diameter) instead of O(diameter).
+  Each iteration materializes the label relation and counts the labels it
+  moved: the count stops the loop and picks the next round's regime.
 
 Fault tolerance at scale: ``localCheckpoint`` every iteration truncates the
 lineage that would otherwise grow unboundedly — via
@@ -30,20 +42,25 @@ iterations the label relation is ALSO committed through the Catalog
 and a fresh ``connected_components`` call RESUMES from the latest committed
 iteration: labels are monotone, so re-running a partially-complete iteration
 is harmless (SURVEY §4/§7's "checkpoint every k rounds" promise).
-
-Driver-loop overhead is kept to two jobs per iteration (one localCheckpoint
-materialization + one convergence probe): the previous label rides along in
-the iterated frame, so convergence is a filter on the just-materialized
-relation, not a third self-join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from tbdedup_spark.plans.ckpt import local_checkpoint_fresh_stats
+
+# Graphs with fewer edges than this finish on the driver; 0 forces the
+# distributed loop. Measured at local[4] with a 4g driver on 10^6 random
+# edges over 10^6 string ids (286,839 components): local finish 16.4 s,
+# driver peak RSS 2.3 GB JVM + 0.40 GB Python; distributed loop 172.9 s,
+# 4.6 GB JVM.
+LOCAL_FINISH_EDGES = 1_000_000
 
 
 def connected_components(
@@ -59,7 +76,15 @@ def connected_components(
     """(image_id, cluster_id) with cluster_id = min id in the component.
 
     ``nodes``: one column ``id_col``. ``edges``: columns a_id, b_id
-    (direction irrelevant). Isolated nodes label themselves.
+    (direction irrelevant) between ids of ``nodes``, as detector edges
+    are; an edge with a null endpoint joins nothing. Isolated nodes label
+    themselves.
+
+    ``max_iter``, ``catalog``, ``ckpt_every``, ``ckpt_table`` and
+    ``delta_threshold`` steer the distributed regime only; a graph under
+    ``LOCAL_FINISH_EDGES`` edges finishes on the driver in one pass, with
+    no iteration cap, no label commits and nothing to resume.
+
     ``catalog``: optional ``sources.catalog.Catalog`` for durable
     every-``ckpt_every``-iterations label commits + mid-loop resume.
     RESUME IS KEYED BY ``ckpt_table`` ALONE — a committed
@@ -94,6 +119,87 @@ def connected_components(
     above at 8 cores — and the late-round cost now scales with |Δ|, not
     |V|+|E|, which is what a 10^12-row run spends most iterations on.
     """
+    ids = nodes.select(F.col(id_col).alias("id"))
+    id_type = ids.schema["id"].dataType
+    # one job materializes the edges (their upstream runs once for either
+    # regime) and observes their count, which picks the regime
+    n_edges = Observation()
+    edges = (
+        edges.select(F.col("a_id").cast(id_type), F.col("b_id").cast(id_type))
+        .dropna()
+        .observe(n_edges, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if n_edges.get["n"] < LOCAL_FINISH_EDGES:
+        labels = _local_labels(edges)
+    else:
+        labels = _distributed_labels(
+            ids, edges, max_iter, catalog, ckpt_every, ckpt_table, delta_threshold
+        )
+    # re-attach the nodes no label moved (self-labelled) — isolated nodes
+    # among them. The label side is endpoint-bounded, so AQE broadcasts it
+    # when small; the corpus side is one map-side pass.
+    return ids.join(labels.withColumnRenamed("label", "_lbl"), "id", "left").select(
+        F.col("id").alias(id_col),
+        F.coalesce("_lbl", F.col("id")).alias("cluster_id"),
+    )
+
+
+def _min_roots(n: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """root[i] = the smallest index in i's component of the graph on
+    ``range(n)`` with edges ``zip(u, v)``.
+
+    Union by min root, vectorized: every edge whose endpoints sit in
+    different trees hooks the larger root under the smaller one
+    (``minimum.at`` keeps the smallest offer), then path halving
+    (``parent = parent[parent]``) runs until every pointer is a root. A
+    pointer never rises, so each root is its tree's minimum; each round
+    removes at least one root, so the loop ends."""
+    parent = np.arange(n)
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            return parent
+        np.minimum.at(parent, np.maximum(ru, rv)[cross], np.minimum(ru, rv)[cross])
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+
+
+def _local_labels(edges: DataFrame) -> DataFrame:
+    """(id, label) for every endpoint whose label moved, solved on the driver.
+    Ids are factorized in sorted order, so the smallest code of a component
+    is its smallest id (Python orders str by code point, the order of
+    Spark's UTF-8 byte comparison)."""
+    tbl = edges.toArrow()
+    arrow_type = tbl.schema.field("a_id").type
+    a = tbl.column("a_id").to_numpy(zero_copy_only=False)
+    b = tbl.column("b_id").to_numpy(zero_copy_only=False)
+    codes, uniq = pd.factorize(np.concatenate([a, b]), sort=True)
+    root = _min_roots(len(uniq), codes[: len(a)], codes[len(a):])
+    moved = root != np.arange(len(uniq))
+    return edges.sparkSession.createDataFrame(
+        pa.table({
+            "id": pa.array(uniq[moved], type=arrow_type),
+            "label": pa.array(uniq[root[moved]], type=arrow_type),
+        })
+    )
+
+
+def _distributed_labels(
+    ids: DataFrame,
+    edges: DataFrame,
+    max_iter: int,
+    catalog,
+    ckpt_every: int,
+    ckpt_table: str,
+    delta_threshold: int,
+) -> DataFrame:
+    """(id, label) for every edge endpoint in ``ids``: the iterated
+    label-propagation loop of ``connected_components``' docstring."""
     sym = (
         edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .unionByName(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
@@ -104,13 +210,12 @@ def connected_components(
     # leave its identity label (every update rule joins through `sym`), so
     # the iterated relation is the edge-endpoint subset of `nodes` —
     # O(min(|V|, 2|E|)) rows per round instead of O(|V|). Isolated nodes
-    # rejoin as their own cluster in the final projection below; at web
+    # rejoin as their own cluster in connected_components' projection; at web
     # scale, where duplicates are sparse, this is the difference between
     # iterating over the corpus and iterating over the duplicate graph.
     # Identical output by construction (a left-join + coalesce(identity)).
     labels = (
-        nodes.select(F.col(id_col).alias("id"))
-        .join(
+        ids.join(
             sym.select(F.col("src").alias("id")).dropDuplicates(["id"]),
             "id",
             "left_semi",
@@ -210,17 +315,7 @@ def connected_components(
         if moved == 0:
             break
     sym.unpersist()
-    # re-attach isolated nodes (self-labelled) — see the active-subgraph
-    # note above. The label side is endpoint-bounded, so AQE broadcasts it
-    # when small; the corpus side is one map-side pass.
-    return (
-        nodes.select(F.col(id_col).alias("id"))
-        .join(labels.withColumnRenamed("label", "_lbl"), "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("_lbl", F.col("id")).alias("cluster_id"),
-        )
-    )
+    return labels
 
 
 def with_representatives(components: DataFrame, id_col: str = "image_id") -> DataFrame:

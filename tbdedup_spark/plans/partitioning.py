@@ -28,7 +28,7 @@ the join and reported, never silently lost.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -78,16 +78,42 @@ def cap_hot_keys(
     combines map-side and the join is AQE-skew-splittable. The sized
     relation is materialized once, so both self-join sides and the report
     read it without re-running ``rel``'s upstream.
+
+    The materializing job also observes the number of dropped groups, so
+    ``dropped_groups(dropped)`` costs no job. The observation sits at the
+    root of the checkpointed relation: one on the group sizes, below the
+    join, never fires when ``rel`` is empty (AQE prunes that side), and
+    reading it would then wait forever.
     """
     if cap is None:
-        return rel, rel.select(*keys, F.lit(0).cast("long").alias("bucket_size")).limit(0)
+        dropped = rel.select(*keys, F.lit(0).cast("long").alias("bucket_size")).limit(0)
+        dropped._n_groups = 0
+        return rel, dropped
     if cap < 1:
         raise ValueError(f"hot-key cap must be >= 1 or None (uncapped), got {cap}")
     sizes = rel.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bsz"))
-    sized = rel.join(sizes, keys).localCheckpoint()
+    over = F.col("_bsz") > cap
+    drops = Observation()
+    sized = (
+        rel.join(sizes, keys)
+        # a group of n rows adds n * (1/n): the sum is the group count up
+        # to rounding, exact while rows_dropped * groups_dropped < 2^52
+        .observe(
+            drops,
+            F.coalesce(F.sum(F.when(over, 1.0 / F.col("_bsz"))), F.lit(0.0)).alias("groups"),
+        )
+        .localCheckpoint()
+    )
     dropped = (
-        sized.filter(F.col("_bsz") > cap)
+        sized.filter(over)
         .groupBy(*keys)
         .agg(F.max("_bsz").alias("bucket_size"))
     )
+    dropped._n_groups = round(drops.get["groups"])
     return sized.filter(F.col("_bsz") <= cap), dropped
+
+
+def dropped_groups(dropped: DataFrame) -> int:
+    """Row count of a report exactly as ``cap_hot_keys`` returned it, read
+    from what its sizing job observed — no job runs."""
+    return dropped.__dict__["_n_groups"]

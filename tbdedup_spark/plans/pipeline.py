@@ -9,7 +9,8 @@ Stage map (SURVEY §3 "our lifecycle"):
   D detector: simhash   simhash.simhash_pairs   (band join on phash)
   E detector: substr    substr.containment_pairs(index join + contains)
   F union of edges      unionByName + dropDuplicates
-  G union-find          unionfind.connected_components (driver loop)
+  G union-find          unionfind.connected_components (finished on the
+                        driver below LOCAL_FINISH_EDGES edges)
   H verify + quarantine verify.check_members, split_verified and
                         attach_evidence (the only stage re-touching bytes)
 
@@ -25,12 +26,16 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text
 from ..operators import exact, minhash, simhash, substr, unionfind, verify
 from ..sources.catalog import Catalog, config_run_id
+from .partitioning import dropped_groups
+
+# the detector names pairs_all's rows carry, one per detector stage
+DETECTORS = ("exact", "minhash", "simhash", "substr")
 
 
 @dataclass(frozen=True)
@@ -157,8 +162,7 @@ def run_pipeline(
             # bijective int32 fold keeps verify Jaccard exactly equal
             carry="hashes32",
         )
-        n_dropped = dropped.count()
-        cat.log_metric("pairs_minhash", "dropped_buckets", n_dropped)
+        cat.log_metric("pairs_minhash", "dropped_buckets", dropped_groups(dropped))
         return pairs
 
     def _sh():
@@ -167,7 +171,7 @@ def run_pipeline(
             max_hamming=config.phash_max_hamming, n_bands=config.phash_bands,
             max_bucket=config.simhash_max_bucket,
         )
-        cat.log_metric("pairs_simhash", "dropped_buckets", dropped.count())
+        cat.log_metric("pairs_simhash", "dropped_buckets", dropped_groups(dropped))
         return pairs
 
     def _sub():
@@ -204,15 +208,21 @@ def run_pipeline(
     cat.release_cached()
 
     pairs_fresh = not cat.exists("pairs_all")
+    # per-detector counts observed by the stage's own write, not a job
+    per_detector = Observation()
     pairs = cat.stage(
         "pairs_all",
         lambda: exact_p.unionByName(mh_p).unionByName(sh_p).unionByName(sub_p)
-        .dropDuplicates(["a_id", "b_id", "detector"]),
+        .dropDuplicates(["a_id", "b_id", "detector"])
+        .observe(
+            per_detector, *[F.count_if(F.col("detector") == d).alias(d) for d in DETECTORS]
+        ),
         "pairs_*",
     )
     if pairs_fresh:  # resume-idempotent, like the signatures bookkeeping
-        for row in pairs.groupBy("detector").count().collect():  # one job, not four
-            cat.log_metric("pairs_all", f"pairs_{row['detector']}", row["count"])
+        for detector, n in per_detector.get.items():
+            if n:  # a detector with no pairs gets no row, as under a groupBy
+                cat.log_metric("pairs_all", f"pairs_{detector}", n)
 
     clusters = cat.stage(
         "clusters",

@@ -34,3 +34,22 @@ def images(spark, corpus_rows):
     df.persist()
     df.count()
     return df
+
+
+@pytest.fixture
+def both_uf_regimes(monkeypatch):
+    """``run_both(run)`` calls ``run()`` under each union-find regime — the
+    driver finish (default threshold), then the distributed loop
+    (``LOCAL_FINISH_EDGES`` = 0) — asserts the results are equal and
+    returns them."""
+    from tbdedup_spark.operators import unionfind
+
+    def run_both(run):
+        local = run()
+        with monkeypatch.context() as m:
+            m.setattr(unionfind, "LOCAL_FINISH_EDGES", 0)
+            distributed = run()
+        assert local == distributed
+        return local
+
+    return run_both

@@ -2,11 +2,24 @@
 reference was missing (its e2e has '# how to check the result?' at
 tests/dedup/test_dedup.py:146; SURVEY §5 'we must do better')."""
 
+from dataclasses import asdict
+
 import pytest
 from pyspark.sql import functions as F
 
 from tbdedup_spark.operators import unionfind
 from tbdedup_spark.plans.pipeline import DedupConfig, run_pipeline
+from tbdedup_spark.sources.catalog import config_run_id
+
+# Spark jobs one run_pipeline submits per stage (its job group) and outside
+# every stage ("ungrouped"), on the conftest corpus into a fresh warehouse.
+# At this scale every stage is latency-bound, so jobs are the cost unit: a
+# change that cuts jobs lowers its entry, one that adds jobs says why.
+JOB_BUDGET = {
+    "signatures": 2, "pairs_exact": 3, "pairs_minhash": 10, "pairs_simhash": 6,
+    "pairs_substr": 12, "pairs_all": 2, "clusters": 4, "verify_checked": 8,
+    "clusters_verified": 3, "ungrouped": 17,
+}
 
 
 def _pair_recall(got_clusters: dict, golden_clusters: dict) -> float:
@@ -33,26 +46,30 @@ def _pair_recall(got_clusters: dict, golden_clusters: dict) -> float:
     return len(gold & ours) / len(gold)
 
 
-def test_unionfind_basic(spark):
+def test_unionfind_basic(spark, both_uf_regimes):
     nodes = spark.createDataFrame([(f"n{i}",) for i in range(8)], ["image_id"])
     edges = spark.createDataFrame(
         [("n1", "n2"), ("n2", "n3"), ("n5", "n6"), ("n3", "n7")], ["a_id", "b_id"]
     )
-    comp = {r.image_id: r.cluster_id for r in unionfind.connected_components(nodes, edges).collect()}
+    comp = both_uf_regimes(lambda: {
+        r.image_id: r.cluster_id for r in unionfind.connected_components(nodes, edges).collect()
+    })
     assert comp["n1"] == comp["n2"] == comp["n3"] == comp["n7"] == "n1"
     assert comp["n5"] == comp["n6"] == "n5"
     assert comp["n0"] == "n0" and comp["n4"] == "n4"
 
 
-def test_unionfind_long_chain(spark):
+def test_unionfind_long_chain(spark, both_uf_regimes):
     """Chain of 40 nodes — pointer jumping must converge well under max_iter."""
     n = 40
     nodes = spark.createDataFrame([(f"c{i:03d}",) for i in range(n)], ["image_id"])
     edges = spark.createDataFrame(
         [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(n - 1)], ["a_id", "b_id"]
     )
-    comp = unionfind.connected_components(nodes, edges, max_iter=12)
-    assert comp.select("cluster_id").distinct().count() == 1
+    labels = both_uf_regimes(lambda: {
+        r.cluster_id for r in unionfind.connected_components(nodes, edges, max_iter=12).collect()
+    })
+    assert labels == {"c000"}
 
 
 @pytest.fixture(scope="module")
@@ -170,3 +187,23 @@ def test_driver_image_clusters_entry(spark):
     }
     recall = len(want_pairs & got_pairs) / max(len(want_pairs), 1)
     assert recall >= 0.99, f"recall {recall:.4f}"
+
+
+def test_pipeline_job_budget(spark, images, tmp_path):
+    """No stage of a fresh run_pipeline submits more Spark jobs than
+    JOB_BUDGET allows (statusTracker job groups, counted as new job ids)."""
+    st = spark.sparkContext.statusTracker()
+    run_id = config_run_id(asdict(DedupConfig()))
+
+    def job_ids():
+        return {
+            s: set(st.getJobIdsForGroup(None if s == "ungrouped" else f"{run_id}/{s}"))
+            for s in JOB_BUDGET
+        }
+
+    before = job_ids()
+    run_pipeline(spark, images, str(tmp_path / "wh"))
+    after = job_ids()
+    used = {s: len(after[s] - before[s]) for s in JOB_BUDGET}
+    over = {s: (n, JOB_BUDGET[s]) for s, n in used.items() if n > JOB_BUDGET[s]}
+    assert not over, f"(jobs, budget) over budget: {over}"

@@ -153,3 +153,45 @@ def test_uncapped_band_joins_size_nothing(spark, plans):
     df = spark.createDataFrame([(1, 0), (2, 0)], "id long, sig long")
     _, dropped = simhash.simhash_pairs(df, "id", "sig", max_bucket=1)
     assert band_agg.search(_formatted(dropped))
+
+
+def _plan_nodes(df) -> list[str]:
+    """Pre-order node strings of the physical plan as first planned, with
+    expression and plan ids blanked so two builds of one plan compare equal."""
+    out, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        out.append(re.sub(r"#\d+L?|plan_id=\d+", "#", node.simpleString(25)))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
+    return out
+
+
+def test_capped_sizing_plan_only_adds_collect_metrics(spark, monkeypatch, tmp_path):
+    """cap_hot_keys observes its dropped groups on the relation it
+    checkpoints. Over a filtered parquet scan, that plan differs from the
+    unobserved one only by the CollectMetrics node: the filter still pushes
+    down and no join or exchange changes."""
+    from tbdedup_spark.operators import simhash
+
+    path = str(tmp_path / "sigs")
+    spark.createDataFrame(
+        [(i, i % 3) for i in range(40)], "id long, sig long"
+    ).write.parquet(path)
+    seen = []
+    cls = type(spark.range(1))
+    observe = cls.observe
+
+    def spy(self, *args):
+        out = observe(self, *args)
+        seen.append((self, out))
+        return out
+
+    monkeypatch.setattr(cls, "observe", spy)
+    sigs = spark.read.parquet(path).filter("sig >= 1")
+    simhash.simhash_pairs(sigs, "id", "sig", max_bucket=4)
+    [(plain, observed)] = seen
+    nodes = _plan_nodes(observed)
+    assert sum(n.startswith("CollectMetrics") for n in nodes) == 1
+    assert [n for n in nodes if not n.startswith("CollectMetrics")] == _plan_nodes(plain)
+    assert any("PushedFilters: [IsNotNull(sig), GreaterThanOrEqual(sig,1)]" in n for n in nodes)

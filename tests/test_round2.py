@@ -133,7 +133,9 @@ def test_setsim_prefix_filter_equals_bruteforce(spark, images):
 # --- union-find: durable checkpoint + mid-loop resume -------------------------
 
 
-def test_unionfind_catalog_resume(spark, tmp_path):
+def test_unionfind_catalog_resume(spark, tmp_path, monkeypatch):
+    # checkpoints and resume exist in the distributed regime only
+    monkeypatch.setattr(unionfind, "LOCAL_FINISH_EDGES", 0)
     n = 64
     nodes = spark.createDataFrame([(f"c{i:03d}",) for i in range(n)], ["image_id"])
     edges = spark.createDataFrame(

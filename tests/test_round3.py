@@ -92,12 +92,14 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     assert ap == again
 
 
-def test_unionfind_delta_regime_chain(spark):
+def test_unionfind_delta_regime_chain(spark, monkeypatch):
     """Semi-naive (delta) rounds must reach the same fixpoint as full
     rounds on the worst case for propagation — a long chain, where every
     late round moves only a handful of labels. delta_threshold=1 forces
     the delta regime from round 2 onward."""
     from tbdedup_spark.operators import unionfind
+
+    monkeypatch.setattr(unionfind, "LOCAL_FINISH_EDGES", 0)  # the loop's regimes
 
     n = 60
     ids = [f"n{i:03d}" for i in range(n)]

@@ -44,17 +44,23 @@ def _random_split_case(spark, seed, n_nodes=400, n_edges=300, hist_frac=0.7):
 
 
 @pytest.mark.parametrize("seed", [7, 1999])
-def test_incremental_matches_full_recompute(spark, seed):
+def test_incremental_matches_full_recompute(spark, seed, both_uf_regimes):
     """incremental_components(history labels, batch) must be label-identical
     to connected_components over the combined graph — the contraction
-    argument in its docstring, checked on random graphs."""
+    argument in its docstring, checked on random graphs, under both
+    union-find regimes (which must agree)."""
     (all_nodes, all_edges, hist_nodes, new_nodes, hist_edges, new_edges) = (
         _random_split_case(spark, seed)
     )
-    hist = unionfind.connected_components(hist_nodes, hist_edges, id_col="doc_id")
-    inc = unionfind.incremental_components(hist, new_nodes, new_edges, id_col="doc_id")
-    full = unionfind.connected_components(all_nodes, all_edges, id_col="doc_id")
-    assert _labels(inc) == _labels(full)
+
+    def run():
+        hist = unionfind.connected_components(hist_nodes, hist_edges, id_col="doc_id")
+        inc = unionfind.incremental_components(hist, new_nodes, new_edges, id_col="doc_id")
+        full = unionfind.connected_components(all_nodes, all_edges, id_col="doc_id")
+        return _labels(inc), _labels(full)
+
+    inc, full = both_uf_regimes(run)
+    assert inc == full
 
 
 def test_incremental_broadcast_guard_fallback_identical(spark):

@@ -104,7 +104,7 @@ def test_ppjoin_prunes_exact_vs_bruteforce(spark):
         assert abs(got[k] - v) < 1e-12
 
 
-def test_unionfind_active_subgraph_isolated_nodes(spark):
+def test_unionfind_active_subgraph_isolated_nodes(spark, both_uf_regimes):
     """r6: the union-find loop iterates only edge-endpoint nodes; isolated
     nodes must still come back self-labelled, and edge-only restriction must
     not change any cluster."""
@@ -115,10 +115,10 @@ def test_unionfind_active_subgraph_isolated_nodes(spark):
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
         "a_id long, b_id long",
     )
-    out = {
+    out = both_uf_regimes(lambda: {
         r["doc_id"]: r["cluster_id"]
         for r in unionfind.connected_components(nodes, edges, id_col="doc_id").collect()
-    }
+    })
     assert len(out) == 30
     assert out[1] == out[2] == out[3] == 1
     assert out[10] == out[11] == 10
@@ -128,15 +128,15 @@ def test_unionfind_active_subgraph_isolated_nodes(spark):
             assert out[i] == i  # isolated: self-labelled
 
 
-def test_unionfind_no_edges_all_isolated(spark):
+def test_unionfind_no_edges_all_isolated(spark, both_uf_regimes):
     """Zero edges: every node is its own cluster and the loop has nothing
     to iterate (the empty active set must not break the convergence probe)."""
     from tbdedup_spark.operators import unionfind
 
     nodes = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
     edges = spark.createDataFrame([], "a_id long, b_id long")
-    out = {
+    out = both_uf_regimes(lambda: {
         r["doc_id"]: r["cluster_id"]
         for r in unionfind.connected_components(nodes, edges, id_col="doc_id").collect()
-    }
+    })
     assert out == {i: i for i in range(7)}

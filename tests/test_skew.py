@@ -3,11 +3,14 @@
 the shared hot-key cap (plans.partitioning.cap_hot_keys) behind every
 bucketed self-join."""
 
+import threading
+
 import pytest
 
 from tbdedup_spark.operators import (
     editdist, minhash, multimodal, setsim, simhash, substr, winnow,
 )
+from tbdedup_spark.plans.partitioning import cap_hot_keys, dropped_groups
 
 
 def _banded(spark, n_hot, n_cold):
@@ -92,6 +95,38 @@ def test_simhash_oversized_bucket_dropped_and_reported(spark):
     rep = dropped.collect()
     assert sorted(r.band_idx for r in rep) == list(range(8))
     assert {r.bucket_size for r in rep} == {n}
+
+
+def test_observed_drops_equal_the_report(spark):
+    """The dropped-group count cap_hot_keys observes in its sizing job
+    equals the report's row count: the simhash hot bucket above (one
+    group per band) and a salted minhash case, where the 60-row bucket is
+    salted, not dropped, and the 200-row one is dropped."""
+    df = spark.createDataFrame([(i, 0x5A5A5A5A5A5A5A5A) for i in range(12)], "id long, sig long")
+    _, dropped = simhash.simhash_pairs(df, "id", "sig", n_bands=8, max_bucket=11)
+    assert dropped_groups(dropped) == dropped.count() == 8
+
+    rows = [(f"h{i:04d}", 0, "HOT") for i in range(60)]
+    rows += [(f"x{i:04d}", 0, "HOTTER") for i in range(200)]
+    rows += [(f"c{i:04d}", 1, f"cold{i}") for i in range(10)]
+    banded = spark.createDataFrame(rows, ["_id", "band_idx", "band_key"])
+    _, dropped = minhash.candidate_pairs(banded, max_bucket=16, salt_cap=128)
+    assert dropped_groups(dropped) == dropped.count() == 1
+
+
+def test_observed_drops_on_empty_relation(spark):
+    """An empty relation under a cap must report 0 dropped groups, not wait
+    forever for an observation that never fires."""
+    rel = spark.createDataFrame([], "k string, v long")
+    got = []
+    worker = threading.Thread(
+        target=lambda: got.append(dropped_groups(cap_hot_keys(rel, ["k"], 5)[1])),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "the dropped-group observation never fired"
+    assert got == [0]
 
 
 _CAP_SITES = {

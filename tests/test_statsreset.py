@@ -52,10 +52,11 @@ def test_fresh_stats_checkpoint_preserves_rows_and_schema(spark):
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
 
 
-def test_unionfind_plan_estimate_stays_bounded(spark):
+def test_unionfind_plan_estimate_stays_bounded(spark, monkeypatch):
     """A chain graph drives several full+delta rounds; the LABEL relation's
     size estimate must stay flat across iterations (the compounding channel
     ran through jumped.localCheckpoint -> next round's self-join)."""
+    monkeypatch.setattr(unionfind, "LOCAL_FINISH_EDGES", 0)  # iterate, don't finish locally
     n = 96
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     chain = spark.createDataFrame(
