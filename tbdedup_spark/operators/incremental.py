@@ -21,7 +21,7 @@ history is 100 TB and the batch is gigabytes. The broadcast hints are
 GUARDED, not forced (same rule as unionfind.incremental_components): the
 public tier operators count the batch once and drop the hints — letting
 AQE decide from runtime sizes — when the batch-derived bound exceeds
-``broadcast_threshold``, so an unexpectedly huge batch degrades to shuffle
+``BROADCAST_THRESHOLD``, so an unexpectedly huge batch degrades to shuffle
 joins instead of a forced-broadcast driver/executor OOM. The one history-sized
 aggregation is the MinHash signature groupBy, and it must NOT be paid per
 batch: pass ``hist_mh_sigs`` (history's signature table, persisted once
@@ -44,13 +44,17 @@ from ..functions import text
 from . import minhash, simhash
 
 
-def _batch_hint(n_rows: int, threshold: int, multiplier: int = 1):
+# Row bound above which a batch-derived relation is not broadcast.
+BROADCAST_THRESHOLD = 5_000_000
+
+
+def _batch_hint(n_rows: int, multiplier: int = 1):
     """Join-hint factory for a relation bounded by ``n_rows * multiplier``
-    rows: ``F.broadcast`` when the bound fits ``threshold``, identity (AQE
-    decides from runtime sizes) when it does not. Mirrors the guarded hint
-    of ``unionfind.incremental_components`` — an unguarded forced broadcast
+    rows: ``F.broadcast`` when the bound fits ``BROADCAST_THRESHOLD``,
+    identity (AQE decides from runtime sizes) when it does not. Shared with
+    ``unionfind.incremental_components`` — an unguarded forced broadcast
     crashes exactly when the batch is big."""
-    if n_rows * multiplier > threshold:
+    if n_rows * multiplier > BROADCAST_THRESHOLD:
         return lambda df: df
     return F.broadcast
 
@@ -146,7 +150,6 @@ def tiered_dedup(
     est_tau: float | None = None,
     checkpoint: bool = False,
     hist_mh_sigs: DataFrame | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """(id_col, tier) for every NEW row: 'exact' | 'near' | 'unique'.
 
@@ -168,10 +171,10 @@ def tiered_dedup(
     + the verify joins); leave False when the inputs are cheap scans, set
     it when ``text_col`` is derived from an expensive upstream.
 
-    ``broadcast_threshold``: the batch is counted once (one cheap scan) and
-    every broadcast hint is dropped — AQE decides from runtime sizes — when
-    its batch-derived row bound (|batch| for id/signature sets, |batch| *
-    n_bands for band rows) exceeds this.
+    The batch is counted once (one cheap scan) and every broadcast hint is
+    dropped — AQE decides from runtime sizes — when its batch-derived row
+    bound (|batch| for id/signature sets, |batch| * n_bands for band rows)
+    exceeds ``BROADCAST_THRESHOLD``.
     """
     mh_new = minhash.minhash_signatures(new_df, id_col, text_col, k, n_perm, seed)
     if hist_mh_sigs is not None:
@@ -190,8 +193,8 @@ def tiered_dedup(
     # re-executes its whole upstream lineage once more, which is exactly the
     # expensive-upstream case the checkpoint knob exists for (ADVICE r5).
     n_new = mh_new.count() if checkpoint else new_df.count()
-    hint_ids = _batch_hint(n_new, broadcast_threshold)
-    hint_band = _batch_hint(n_new, broadcast_threshold, n_bands)
+    hint_ids = _batch_hint(n_new)
+    hint_band = _batch_hint(n_new, n_bands)
 
     sig = F.sha2(F.encode(text.norm_text(text_col), "utf-8"), 256)
     new_sigs = new_df.select(F.col(id_col).alias("_id"), sig.alias("_sig"))
@@ -266,7 +269,6 @@ def tiered_image_dedup(
     phash_col: str = "phash",
     max_hamming: int = 7,
     n_bands: int = 8,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """(id_col, tier) for every NEW image: 'exact' | 'near' | 'unique' —
     ``tiered_dedup``'s batch-vs-corpus shape applied to the input_hint image
@@ -285,12 +287,12 @@ def tiered_image_dedup(
     Same scale contract as ``tiered_dedup``: every join is hinted on a
     relation bounded by the NEW batch; history is only ever map-side
     scanned. Within-batch duplicates are out of scope by the same contract.
-    ``broadcast_threshold`` guards the hints exactly as in ``tiered_dedup``
+    ``BROADCAST_THRESHOLD`` guards the hints exactly as in ``tiered_dedup``
     (band rows count |batch| * n_bands against it).
     """
     n_new = new_imgs.count()
-    hint_ids = _batch_hint(n_new, broadcast_threshold)
-    hint_band = _batch_hint(n_new, broadcast_threshold, n_bands)
+    hint_ids = _batch_hint(n_new)
+    hint_band = _batch_hint(n_new, n_bands)
     exact_ids, near_ids = _image_exact_near_ids(
         new_imgs, hist_imgs, id_col, bytes_col, phash_col, max_hamming, n_bands,
         hint_ids, hint_band,
@@ -481,7 +483,6 @@ def tiered_image_crop_dedup(
     max_hamming: int = 7,
     n_bands: int = 8,
     min_shared: int = 2,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """(id_col, tier) for every NEW image: 'exact' | 'near' | 'crop' |
     'unique' — ``tiered_image_dedup`` extended with the round's
@@ -498,15 +499,15 @@ def tiered_image_crop_dedup(
     history index — at 100 TB the history psig table is maintained
     incrementally exactly like the history MinHash table in
     ``tiered_dedup``): every join is hinted on a batch-bounded relation,
-    history is only ever map-side scanned. ``broadcast_threshold`` guards
+    history is only ever map-side scanned. ``BROADCAST_THRESHOLD`` guards
     the hints as in ``tiered_dedup``; the crop probe's bound is
     |new_psigs| (already per-patch), counted separately from the batch.
     """
     n_new = new_imgs.count()
     n_psig = new_psigs.count()
-    hint_ids = _batch_hint(n_new, broadcast_threshold)
-    hint_band = _batch_hint(n_new, broadcast_threshold, n_bands)
-    hint_crop = _batch_hint(n_psig, broadcast_threshold)
+    hint_ids = _batch_hint(n_new)
+    hint_band = _batch_hint(n_new, n_bands)
+    hint_crop = _batch_hint(n_psig)
     exact_ids, near_ids = _image_exact_near_ids(
         new_imgs, hist_imgs, id_col, bytes_col, phash_col, max_hamming, n_bands,
         hint_ids, hint_band,

@@ -15,19 +15,22 @@ materializes the edge relation):
   back as an Arrow-built relation. At the flagship's scale every Spark job
   is latency, so this replaces one job per propagation round with a fixed
   handful: on the 640-row flagship corpus, 29 jobs became 4.
-* DISTRIBUTED LOOP, above it: each iteration does two monotone steps
-  (labels only ever decrease, so iterations are idempotent and safe to
-  re-run — the property that makes the checkpoint/resume story sound):
+* DISTRIBUTED LOOP, above it: each round does two monotone steps over the
+  complete edge and label relations (labels only ever decrease, so rounds
+  are idempotent and safe to re-run — the property that makes the
+  checkpoint/resume story sound):
 
   1. neighbor propagation  l(v) ← min(l(v), min_{(u,v)∈E} l(u))   [join on edges]
   2. pointer jumping       l(v) ← min(l(v), l(l(v)))              [join labels]
 
   Step 2 (path halving) makes chain-shaped components (caption-containment
   chains A ⊂ B ⊂ C…) converge in O(log diameter) instead of O(diameter).
-  Each iteration materializes the label relation and counts the labels it
-  moved: the count stops the loop and picks the next round's regime.
+  The checkpoint that materializes a round's labels also observes how many
+  of them moved, and the loop stops after a round that moved none. There is
+  no iteration cap: labels only fall, within the finite id set, so the
+  fixpoint is always reached.
 
-Fault tolerance at scale: ``localCheckpoint`` every iteration truncates the
+Fault tolerance at scale: ``localCheckpoint`` every round truncates the
 lineage that would otherwise grow unboundedly — via
 ``plans.ckpt.local_checkpoint_fresh_stats``, because a plain checkpoint
 carries the checkpointed plan's SIZE ESTIMATE into the new leaf and an
@@ -36,12 +39,14 @@ until the driver grinds multi-megabit BigInteger products inside every
 stats-reading optimizer rule (see plans/ckpt.py for the full mechanism and
 measurements). Local checkpoints also live on
 executor-local storage — one lost executor at hour 3 of a 100-TB run kills
-the job unrecoverably. When a ``catalog`` is passed, every ``ckpt_every``
-iterations the label relation is ALSO committed through the Catalog
-(reliable storage, atomic _SUCCESS/Iceberg-snapshot semantics) and re-read,
-and a fresh ``connected_components`` call RESUMES from the latest committed
-iteration: labels are monotone, so re-running a partially-complete iteration
-is harmless (SURVEY §4/§7's "checkpoint every k rounds" promise).
+the job unrecoverably. When a ``catalog`` is passed, every ``CKPT_EVERY``
+rounds the label relation is ALSO committed through the Catalog (reliable
+storage, atomic _SUCCESS/Iceberg-snapshot semantics) and re-read, and a
+fresh ``connected_components`` call on the same edges RESUMES from the
+latest committed round: labels are monotone, so re-running a
+partially-complete round is harmless (SURVEY §4/§7's "checkpoint every k
+rounds" promise). The commits are named by a key derived from the edges,
+so a call on other edges never resumes them.
 """
 
 from __future__ import annotations
@@ -53,6 +58,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from tbdedup_spark.operators.incremental import _batch_hint
 from tbdedup_spark.plans.ckpt import local_checkpoint_fresh_stats
 
 # Graphs with fewer edges than this finish on the driver; 0 forces the
@@ -61,17 +67,15 @@ from tbdedup_spark.plans.ckpt import local_checkpoint_fresh_stats
 # driver peak RSS 2.3 GB JVM + 0.40 GB Python; distributed loop 172.9 s,
 # 4.6 GB JVM.
 LOCAL_FINISH_EDGES = 1_000_000
+# Distributed rounds between durable label commits when a catalog is passed.
+CKPT_EVERY = 4
 
 
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "image_id",
-    max_iter: int = 50,
     catalog=None,
-    ckpt_every: int = 4,
-    ckpt_table: str = "uf_labels",
-    delta_threshold: int = 100_000,
 ) -> DataFrame:
     """(image_id, cluster_id) with cluster_id = min id in the component.
 
@@ -80,62 +84,38 @@ def connected_components(
     are; an edge with a null endpoint joins nothing. Isolated nodes label
     themselves.
 
-    ``max_iter``, ``catalog``, ``ckpt_every``, ``ckpt_table`` and
-    ``delta_threshold`` steer the distributed regime only; a graph under
-    ``LOCAL_FINISH_EDGES`` edges finishes on the driver in one pass, with
-    no iteration cap, no label commits and nothing to resume.
-
-    ``catalog``: optional ``sources.catalog.Catalog`` for durable
-    every-``ckpt_every``-iterations label commits + mid-loop resume.
-    RESUME IS KEYED BY ``ckpt_table`` ALONE — a committed
-    ``{ckpt_table}_iter*`` table is trusted with no check that it came from
-    THESE nodes/edges, so two CC invocations sharing a catalog run_id MUST
-    use distinct ``ckpt_table`` names or the second silently resumes the
-    first's labels (review catch; ``incremental_components`` defaults its
-    inner call to ``uf_labels_incr`` for this reason).
-
-    Two iteration regimes (``delta_threshold`` switches them): label
-    propagation converges front-loaded — measured on a 600k-node corpus,
-    iteration 0 moved 297,137 labels and iterations 1-6 moved 41, 4, 1, 1,
-    1, 0, yet each full iteration re-shuffled the complete edge and label
-    relations (~3.5 s/iteration for a handful of rows). When the previous
-    iteration moved fewer than ``delta_threshold`` labels, the loop switches
-    to SEMI-NAIVE (delta) iterations: only changed labels can lower anything
-    further (labels are monotone — a neighbor/jump contribution from an
-    unchanged label was already applied the round it last changed), so the
-    three datalog rules are driven by the broadcast delta —
-
-      Δ-neighbor  edge(u,v), Δl(u)          -> cand(v, l(u))
-      Δ-jump-ptr  Δlab(v)=w, l(w)=x         -> cand(v, x)   [v's pointer moved]
-      Δ-jump-val  lab(v)=w, Δl(w)=x         -> cand(v, x)   [target's value moved]
-
-    each driven by the broadcast delta (bounded by ``delta_threshold`` rows —
-    no shuffle of the full relations; the static-static halves of the rules
-    contribute nothing new by the semi-naive argument), followed by one
-    least() update join of the candidate mins onto the label relation. The
-    candidate relation gets NO broadcast hint: its size is the delta's
-    neighborhood, not the delta, so AQE picks broadcast-vs-shuffle from its
-    runtime size. Same fixpoint, measured 31.6s -> ~17s on the corpus
-    above at 8 cores — and the late-round cost now scales with |Δ|, not
-    |V|+|E|, which is what a 10^12-row run spends most iterations on.
+    ``catalog``: optional ``sources.catalog.Catalog``. The distributed loop
+    commits its labels through it every ``CKPT_EVERY`` rounds as
+    ``uf_labels_<key>_iterNNNN`` and resumes from the latest such commit.
+    ``<key>`` is derived from the input: the edge count and an
+    order-independent sum of the (a_id, b_id) pairs' 64-bit hashes, so
+    calls on other edges sharing the catalog never read each other's
+    labels. A graph under ``LOCAL_FINISH_EDGES`` edges finishes on the
+    driver in one pass and commits nothing.
     """
     ids = nodes.select(F.col(id_col).alias("id"))
     id_type = ids.schema["id"].dataType
     # one job materializes the edges (their upstream runs once for either
-    # regime) and observes their count, which picks the regime
-    n_edges = Observation()
+    # regime) and observes their count, which picks the regime, and their
+    # hash-sum (decimal: exact, so order-independent, and no overflow below
+    # ~10^19 edges), which with the count keys the label commits
+    seen = Observation()
     edges = (
         edges.select(F.col("a_id").cast(id_type), F.col("b_id").cast(id_type))
         .dropna()
-        .observe(n_edges, F.count(F.lit(1)).alias("n"))
+        .observe(
+            seen,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("a_id", "b_id").cast("decimal(38,0)")).alias("h"),
+        )
         .localCheckpoint()
     )
-    if n_edges.get["n"] < LOCAL_FINISH_EDGES:
+    n_edges = seen.get["n"]
+    if n_edges < LOCAL_FINISH_EDGES:
         labels = _local_labels(edges)
     else:
-        labels = _distributed_labels(
-            ids, edges, max_iter, catalog, ckpt_every, ckpt_table, delta_threshold
-        )
+        key = f"{n_edges}_{int(seen.get['h'] or 0) % (1 << 64):016x}"
+        labels = _distributed_labels(ids, edges, catalog, f"uf_labels_{key}_iter")
     # re-attach the nodes no label moved (self-labelled) — isolated nodes
     # among them. The label side is endpoint-bounded, so AQE broadcasts it
     # when small; the corpus side is one map-side pass.
@@ -190,16 +170,11 @@ def _local_labels(edges: DataFrame) -> DataFrame:
 
 
 def _distributed_labels(
-    ids: DataFrame,
-    edges: DataFrame,
-    max_iter: int,
-    catalog,
-    ckpt_every: int,
-    ckpt_table: str,
-    delta_threshold: int,
+    ids: DataFrame, edges: DataFrame, catalog, prefix: str
 ) -> DataFrame:
     """(id, label) for every edge endpoint in ``ids``: the iterated
-    label-propagation loop of ``connected_components``' docstring."""
+    label-propagation loop of the module docstring. ``prefix`` names the
+    label commits of these edges (``{prefix}NNNN`` after round NNNN)."""
     sym = (
         edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .unionByName(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
@@ -222,98 +197,62 @@ def _distributed_labels(
         )
         .select("id", F.col("id").alias("label"))
     )
-    start = 0
+    done = 0  # rounds the labels already reflect
     if catalog is not None:
-        # resume: the latest durable label commit wins (monotone labels make
-        # replaying the partial iteration after it idempotent). One catalog
-        # listing, not one exists() probe per candidate iteration.
-        pre = f"{ckpt_table}_iter"
-        committed = sorted(
-            it for it in (
-                int(t[len(pre):]) for t in catalog.list_tables(pre)
-                if t[len(pre):].isdigit()
-            )
-            if it % ckpt_every == 0 and it <= max_iter
+        # resume: the latest durable label commit of these edges wins
+        # (monotone labels make replaying the rounds after it idempotent).
+        # One catalog listing, not one exists() probe per candidate round.
+        done = max(
+            (int(t[len(prefix):]) for t in catalog.list_tables(prefix)
+             if t[len(prefix):].isdigit()),
+            default=0,
         )
-        if committed:
-            start = committed[-1]
-            labels = catalog.read(f"{ckpt_table}_iter{start:04d}")
+        if done:
+            labels = catalog.read(f"{prefix}{done:04d}")
     labels = local_checkpoint_fresh_stats(labels)
 
-    moved = None  # unknown -> full iteration (also right after resume)
-    delta = None  # (id, label) rows that changed last iteration
-    for i in range(start, max_iter):
-        if moved is None or moved > delta_threshold:
-            # FULL round: min neighbor label, then pointer jumping, over the
-            # complete relations (the first round or two does ~all the work)
-            nbr_min = (
-                sym.join(labels.withColumnRenamed("id", "src"), "src")
-                .groupBy("dst")
-                .agg(F.min("label").alias("nbr_label"))
-                .withColumnRenamed("dst", "id")
-            )
-            stepped = (
-                labels.join(nbr_min, "id", "left")
-                .select(
-                    "id",
-                    F.col("label").alias("_old"),
-                    F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
-                )
-            )
-            jumped = (
-                stepped.alias("x")
-                .join(
-                    stepped.select(F.col("id").alias("label"), F.col("label").alias("label2")).alias("y"),
-                    "label",
-                    "left",
-                )
-                .select(
-                    F.col("id"),
-                    F.col("_old"),
-                    F.least("label", F.coalesce("label2", "label")).alias("label"),
-                )
-            )
-        else:
-            # DELTA round (semi-naive): candidates only from the broadcast
-            # delta; everything else is a map-side pass over `labels`.
-            d = F.broadcast(delta)
-            cand_nbr = sym.join(
-                d.select(F.col("id").alias("src"), F.col("label").alias("_dl")), "src"
-            ).select(F.col("dst").alias("id"), "_dl")
-            # v's pointer moved to w -> lowest known label of w
-            cand_ptr = labels.join(
-                d.select(F.col("label").alias("id"), F.col("id").alias("_v")), "id"
-            ).select(F.col("_v").alias("id"), F.col("label").alias("_dl"))
-            # v points at w whose label value just moved
-            cand_val = labels.join(
-                d.select(F.col("id").alias("label"), F.col("label").alias("_dl")), "label"
-            ).select("id", "_dl")
-            cand = (
-                cand_nbr.unionByName(cand_ptr).unionByName(cand_val)
-                .groupBy("id")
-                .agg(F.min("_dl").alias("_cand"))
-            )
-            # NO broadcast hint on cand: the delta itself is bounded by
-            # delta_threshold rows, but cand is the delta's NEIGHBORHOOD —
-            # one high-degree node entering the delta late can blow it past
-            # broadcast/driver limits at 10^12 edges (ADVICE r3). AQE sees
-            # cand's true runtime size and picks broadcast vs shuffle itself.
-            jumped = labels.join(cand, "id", "left").select(
+    while True:
+        # min neighbor label, then pointer jumping
+        nbr_min = (
+            sym.join(labels.withColumnRenamed("id", "src"), "src")
+            .groupBy("dst")
+            .agg(F.min("label").alias("nbr_label"))
+            .withColumnRenamed("dst", "id")
+        )
+        stepped = (
+            labels.join(nbr_min, "id", "left")
+            .select(
                 "id",
                 F.col("label").alias("_old"),
-                F.least("label", F.coalesce("_cand", "label")).alias("label"),
+                F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
             )
-        jumped = local_checkpoint_fresh_stats(jumped)
-        # convergence probe doubles as the regime selector — a filter over
-        # the just-materialized partitions, not a join
-        delta = jumped.filter(F.col("label") != F.col("_old")).select("id", "label")
-        moved = delta.count()
-        labels = jumped.select("id", "label")
-        if catalog is not None and (i + 1) % ckpt_every == 0 and moved != 0:
-            catalog.write(labels, f"{ckpt_table}_iter{i + 1:04d}")
-            labels = catalog.read(f"{ckpt_table}_iter{i + 1:04d}")
-        if moved == 0:
+        )
+        jumped = (
+            stepped.alias("x")
+            .join(
+                stepped.select(F.col("id").alias("label"), F.col("label").alias("label2")).alias("y"),
+                "label",
+                "left",
+            )
+            .select(
+                F.col("id"),
+                F.col("_old"),
+                F.least("label", F.coalesce("label2", "label")).alias("label"),
+            )
+        )
+        # the convergence probe rides the checkpoint that materializes the
+        # round; it sits at the root of the checkpointed relation, so it
+        # fires even when the relation is empty
+        moved = Observation()
+        labels = local_checkpoint_fresh_stats(
+            jumped.observe(moved, F.count_if(F.col("label") != F.col("_old")).alias("n"))
+        ).select("id", "label")
+        done += 1
+        if moved.get["n"] == 0:
             break
+        if catalog is not None and done % CKPT_EVERY == 0:
+            catalog.write(labels, f"{prefix}{done:04d}")
+            labels = catalog.read(f"{prefix}{done:04d}")
     sym.unpersist()
     return labels
 
@@ -334,8 +273,6 @@ def incremental_components(
     new_nodes: DataFrame,
     new_edges: DataFrame,
     id_col: str = "image_id",
-    broadcast_threshold: int = 5_000_000,
-    **cc_kwargs,
 ) -> DataFrame:
     """Day-2 cluster maintenance: merge a NEW batch (nodes + candidate edges)
     into existing min-label components WITHOUT re-running union-find over
@@ -368,8 +305,9 @@ def incremental_components(
     super-nodes can be, so it too is endpoint-bounded). The broadcast hints
     on those joins are GUARDED, not forced: the endpoint set is counted
     (cheap — it is localCheckpoint'd and batch-scale) and the hints apply
-    only when it fits ``broadcast_threshold``; a huge crawl batch beyond it
-    falls back to AQE-decided joins instead of an 8GB-broadcast/driver OOM
+    only when it fits ``incremental.BROADCAST_THRESHOLD``; a huge crawl
+    batch beyond it falls back to AQE-decided joins instead of an
+    8GB-broadcast/driver OOM
     (ADVICE-r3: an unguarded forced broadcast crashes exactly when the
     batch is big; unguarded AQE costs history one wasted shuffle-write pass
     when the initial SMJ plan is only converted after runtime stats — the
@@ -400,7 +338,7 @@ def incremental_components(
         .dropDuplicates(["id"])
     )
     endpoints = local_checkpoint_fresh_stats(endpoints)
-    _hint = F.broadcast if endpoints.count() <= broadcast_threshold else (lambda df: df)
+    _hint = _batch_hint(endpoints.count())
     touched = hist.join(_hint(endpoints), "id").select("id", "cluster_id")
     touched = local_checkpoint_fresh_stats(touched)
 
@@ -422,10 +360,7 @@ def incremental_components(
     )
 
     # 3. Union-find on the contracted (batch-scale) graph.
-    # distinct checkpoint namespace: a caller forwarding the SAME catalog
-    # that the bootstrap full CC used must not cross-resume its labels
-    cc_kwargs.setdefault("ckpt_table", "uf_labels_incr")
-    merged = connected_components(nodes_c, ec, id_col="id", **cc_kwargs)
+    merged = connected_components(nodes_c, ec, id_col="id")
 
     # 4. Re-expand: relabel history through the bounded remap; emit new rows
     #    directly. Identity remaps are dropped so untouched clusters take the

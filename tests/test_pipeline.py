@@ -60,14 +60,14 @@ def test_unionfind_basic(spark, both_uf_regimes):
 
 
 def test_unionfind_long_chain(spark, both_uf_regimes):
-    """Chain of 40 nodes — pointer jumping must converge well under max_iter."""
+    """Chain of 40 nodes: every node reaches the chain's minimum."""
     n = 40
     nodes = spark.createDataFrame([(f"c{i:03d}",) for i in range(n)], ["image_id"])
     edges = spark.createDataFrame(
         [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(n - 1)], ["a_id", "b_id"]
     )
     labels = both_uf_regimes(lambda: {
-        r.cluster_id for r in unionfind.connected_components(nodes, edges, max_iter=12).collect()
+        r.cluster_id for r in unionfind.connected_components(nodes, edges).collect()
     })
     assert labels == {"c000"}
 

@@ -133,26 +133,83 @@ def test_setsim_prefix_filter_equals_bruteforce(spark, images):
 # --- union-find: durable checkpoint + mid-loop resume -------------------------
 
 
+def _chain(spark, ids, links):
+    nodes = spark.createDataFrame([(i,) for i in ids], ["image_id"])
+    edges = spark.createDataFrame(links, ["a_id", "b_id"])
+    return nodes, edges
+
+
+def _killed_on_second_commit(cat, monkeypatch):
+    """Make ``cat`` raise on its second union-find label commit, as a run
+    killed between two commits would stop."""
+    real_write, commits = cat.write, []
+
+    def write(df, table, *args, **kwargs):
+        if table.startswith("uf_labels_"):
+            commits.append(table)
+            if len(commits) == 2:
+                raise RuntimeError("killed")
+        return real_write(df, table, *args, **kwargs)
+
+    monkeypatch.setattr(cat, "write", write)
+    return commits
+
+
 def test_unionfind_catalog_resume(spark, tmp_path, monkeypatch):
     # checkpoints and resume exist in the distributed regime only
     monkeypatch.setattr(unionfind, "LOCAL_FINISH_EDGES", 0)
-    n = 64
-    nodes = spark.createDataFrame([(f"c{i:03d}",) for i in range(n)], ["image_id"])
-    edges = spark.createDataFrame(
-        [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(n - 1)], ["a_id", "b_id"]
-    )
+    monkeypatch.setattr(unionfind, "CKPT_EVERY", 2)
+    ids = [f"c{i:03d}" for i in range(64)]
+    nodes, edges = _chain(spark, ids, list(zip(ids, ids[1:])))
     direct = {r.image_id: r.cluster_id for r in unionfind.connected_components(nodes, edges).collect()}
+    assert set(direct.values()) == {"c000"}
 
-    cat = Catalog(spark, str(tmp_path / "wh"), "run_uftest")
-    # "killed" run: only 3 iterations happen, durable commit lands at iter 2
-    partial = unionfind.connected_components(nodes, edges, max_iter=3, catalog=cat, ckpt_every=2)
-    assert cat.exists("uf_labels_iter0002")
-    assert {r.cluster_id for r in partial.collect()} != {"c000"}  # genuinely unfinished
-    # resume: a fresh call starts from the durable iter-2 labels and converges
-    resumed = unionfind.connected_components(nodes, edges, catalog=cat, ckpt_every=2)
+    wh = str(tmp_path / "wh")
+    cat = Catalog(spark, wh, "run_uftest")
+    commits = _killed_on_second_commit(cat, monkeypatch)
+    with pytest.raises(RuntimeError, match="killed"):
+        unionfind.connected_components(nodes, edges, catalog=cat)
+    assert len(commits) == 2 and commits[0].endswith("_iter0002")
+    assert cat.list_tables("uf_labels_") == [commits[0]]
+
+    # resume: a fresh run starts from the durable round-2 labels
+    fresh = Catalog(spark, wh, "run_uftest")
+    reads = []
+    real_read = fresh.read
+    monkeypatch.setattr(fresh, "read", lambda t, *a: reads.append(t) or real_read(t, *a))
+    resumed = unionfind.connected_components(nodes, edges, catalog=fresh)
+    assert reads[0] == commits[0]
     got = {r.image_id: r.cluster_id for r in resumed.collect()}
     assert got == direct
-    assert all(v == "c000" for v in got.values())
+
+
+def test_unionfind_resume_ignores_other_graph(spark, tmp_path, monkeypatch):
+    """Label commits are keyed by the edges they were computed from: a
+    crashed run on one graph must not seed a later run on another graph
+    over the same nodes and catalog."""
+    monkeypatch.setattr(unionfind, "LOCAL_FINISH_EDGES", 0)
+    monkeypatch.setattr(unionfind, "CKPT_EVERY", 2)
+    ids = [f"c{i:03d}" for i in range(64)]
+    nodes, g1 = _chain(spark, ids, list(zip(ids, ids[1:])))
+    cat = Catalog(spark, str(tmp_path / "wh"), "run_uftest")
+    commits = _killed_on_second_commit(cat, monkeypatch)
+    with pytest.raises(RuntimeError, match="killed"):
+        unionfind.connected_components(nodes, g1, catalog=cat)
+    assert len(cat.list_tables("uf_labels_")) == 1
+
+    # G2: the same nodes as two chains, c000..c031 and c032..c063
+    g2 = spark.createDataFrame(
+        [(a, b) for a, b in zip(ids, ids[1:]) if b != "c032"], ["a_id", "b_id"]
+    )
+    cat = Catalog(spark, str(tmp_path / "wh"), "run_uftest")
+    got = {
+        r.image_id: r.cluster_id
+        for r in unionfind.connected_components(nodes, g2, catalog=cat).collect()
+    }
+    assert got == {i: "c000" if i < "c032" else "c032" for i in ids}
+    # G2 committed under its own key, beside G1's round-2 labels
+    keys = {t.rsplit("_iter", 1)[0] for t in cat.list_tables("uf_labels_")}
+    assert len(keys) == 2
 
 
 # --- decode errors: sentinel uniqueness + quarantine routing ------------------

@@ -92,45 +92,6 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     assert ap == again
 
 
-def test_unionfind_delta_regime_chain(spark, monkeypatch):
-    """Semi-naive (delta) rounds must reach the same fixpoint as full
-    rounds on the worst case for propagation — a long chain, where every
-    late round moves only a handful of labels. delta_threshold=1 forces
-    the delta regime from round 2 onward."""
-    from tbdedup_spark.operators import unionfind
-
-    monkeypatch.setattr(unionfind, "LOCAL_FINISH_EDGES", 0)  # the loop's regimes
-
-    n = 60
-    ids = [f"n{i:03d}" for i in range(n)]
-    nodes = spark.createDataFrame([(i,) for i in ids], "image_id string")
-    chain = [(ids[i], ids[i + 1]) for i in range(n - 1)]
-    # plus a separate 3-clique and an isolated node
-    extra = [("z1", "z2"), ("z2", "z3"), ("z1", "z3")]
-    nodes = nodes.union(
-        spark.createDataFrame([("z1",), ("z2",), ("z3",), ("solo",)], "image_id string")
-    )
-    edges = spark.createDataFrame(chain + extra, "a_id string, b_id string")
-
-    out = {
-        r.image_id: r.cluster_id
-        for r in unionfind.connected_components(
-            nodes, edges, delta_threshold=10**9  # always-delta after round 0
-        ).collect()
-    }
-    assert all(out[i] == ids[0] for i in ids)
-    assert out["z1"] == out["z2"] == out["z3"] == "z1"
-    assert out["solo"] == "solo"
-
-    full = {
-        r.image_id: r.cluster_id
-        for r in unionfind.connected_components(
-            nodes, edges, delta_threshold=1  # moved>1 -> full rounds
-        ).collect()
-    }
-    assert out == full
-
-
 def test_asof_join_semantics(spark):
     """Backward as-of: greatest right ts <= left ts per key; no prior row ->
     nulls; tolerance nulls too-old matches; equal-ts right row is eligible."""

@@ -87,7 +87,7 @@ def test_tiered_dedup_precomputed_history_sigs(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_tiered_dedup_broadcast_guard_is_plan_only(spark):
+def test_tiered_dedup_broadcast_guard_is_plan_only(spark, monkeypatch):
     """The guarded broadcast hints (review catch: an oversized batch must
     degrade to AQE-decided joins, not a forced-broadcast OOM) change the
     physical plan only: verdicts are identical with the hints forced off
@@ -98,13 +98,9 @@ def test_tiered_dedup_broadcast_guard_is_plan_only(spark):
         map(tuple, incremental.tiered_dedup(new_df, hist_df, tau=0.6).collect())
     )
     for thr in (0, 10**12):
+        monkeypatch.setattr(incremental, "BROADCAST_THRESHOLD", thr)
         got = sorted(
-            map(
-                tuple,
-                incremental.tiered_dedup(
-                    new_df, hist_df, tau=0.6, broadcast_threshold=thr
-                ).collect(),
-            )
+            map(tuple, incremental.tiered_dedup(new_df, hist_df, tau=0.6).collect())
         )
         assert got == want, thr
 

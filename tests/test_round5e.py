@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from tbdedup_spark.operators import unionfind
+from tbdedup_spark.operators import incremental, unionfind
 
 SF = "/root/testdata/sf0.001"
 
@@ -63,8 +63,8 @@ def test_incremental_matches_full_recompute(spark, seed, both_uf_regimes):
     assert inc == full
 
 
-def test_incremental_broadcast_guard_fallback_identical(spark):
-    """broadcast_threshold=0 forces the over-threshold path (no broadcast
+def test_incremental_broadcast_guard_fallback_identical(spark, monkeypatch):
+    """BROADCAST_THRESHOLD = 0 forces the over-threshold path (no broadcast
     hints, AQE-decided joins); labels must be identical to the guarded
     map-side path — the safety valve changes the PLAN, never the answer."""
     (all_nodes, all_edges, hist_nodes, new_nodes, hist_edges, new_edges) = (
@@ -72,9 +72,8 @@ def test_incremental_broadcast_guard_fallback_identical(spark):
     )
     hist = unionfind.connected_components(hist_nodes, hist_edges, id_col="doc_id")
     inc = unionfind.incremental_components(hist, new_nodes, new_edges, id_col="doc_id")
-    inc0 = unionfind.incremental_components(
-        hist, new_nodes, new_edges, id_col="doc_id", broadcast_threshold=0
-    )
+    monkeypatch.setattr(incremental, "BROADCAST_THRESHOLD", 0)
+    inc0 = unionfind.incremental_components(hist, new_nodes, new_edges, id_col="doc_id")
     assert _labels(inc0) == _labels(inc)
 
 

@@ -10,6 +10,7 @@ of a downstream hash mismatch.
 from __future__ import annotations
 
 import random
+import threading
 
 from pyspark.sql import functions as F
 
@@ -130,13 +131,22 @@ def test_unionfind_active_subgraph_isolated_nodes(spark, both_uf_regimes):
 
 def test_unionfind_no_edges_all_isolated(spark, both_uf_regimes):
     """Zero edges: every node is its own cluster and the loop has nothing
-    to iterate (the empty active set must not break the convergence probe)."""
+    to iterate (the empty active set must not break the convergence probe).
+    Run in a thread joined with a timeout: an observed moved-label count
+    that never fires would otherwise wait forever."""
     from tbdedup_spark.operators import unionfind
 
     nodes = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
     edges = spark.createDataFrame([], "a_id long, b_id long")
-    out = both_uf_regimes(lambda: {
-        r["doc_id"]: r["cluster_id"]
-        for r in unionfind.connected_components(nodes, edges, id_col="doc_id").collect()
-    })
-    assert out == {i: i for i in range(7)}
+    got = []
+    worker = threading.Thread(
+        target=lambda: got.append(both_uf_regimes(lambda: {
+            r["doc_id"]: r["cluster_id"]
+            for r in unionfind.connected_components(nodes, edges, id_col="doc_id").collect()
+        })),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "the moved-label observation never fired"
+    assert got == [{i: i for i in range(7)}]

@@ -53,7 +53,7 @@ def test_fresh_stats_checkpoint_preserves_rows_and_schema(spark):
 
 
 def test_unionfind_plan_estimate_stays_bounded(spark, monkeypatch):
-    """A chain graph drives several full+delta rounds; the LABEL relation's
+    """A chain graph drives several propagation rounds; the LABEL relation's
     size estimate must stay flat across iterations (the compounding channel
     ran through jumped.localCheckpoint -> next round's self-join)."""
     monkeypatch.setattr(unionfind, "LOCAL_FINISH_EDGES", 0)  # iterate, don't finish locally
