@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
+from ..plans.partitioning import bucket_self_join
 from . import simhash
 
 
@@ -431,18 +432,9 @@ def semdedup(
         asg.select(F.col("_id").alias(id_col), "cell").write.mode(
             "overwrite"
         ).parquet(assignments_out_path)
-    a = asg.select(
-        F.col("_id").alias("a_id"), "cell", F.col("_v").alias("_va"),
-        F.col("_nrm").alias("_na"),
-    )
-    b = asg.select(
-        F.col("_id").alias("b_id"), "cell", F.col("_v").alias("_vb"),
-        F.col("_nrm").alias("_nb"),
-    )
+    pairs, _, _ = bucket_self_join(asg, ["cell"], None, carry=("_v", "_nrm"))
     dropped = (
-        a.join(b, "cell")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(vectors.dot("_va", "_vb") / (F.col("_na") * F.col("_nb")) >= tau)
+        pairs.filter(vectors.dot("_va", "_vb") / (F.col("_nrma") * F.col("_nrmb")) >= tau)
         .select(F.col("b_id").alias("_id"))
         .distinct()
     )

@@ -102,7 +102,6 @@ def chunk_stats(
     text_col: str = "text",
     w: int = 16,
     divisor: int = 64,
-    checkpoint: bool = True,
     min_partitions: int | None = None,
 ) -> DataFrame:
     """Per-doc chunk-dedup profile: (id_col, n_chunks, dup_chunks,
@@ -111,23 +110,20 @@ def chunk_stats(
     character mass a chunk store would not pay twice — the sub-document
     redundancy signal whole-doc dedup misses.
 
-    ``checkpoint`` (default True) materializes the narrow (id, hash, len)
-    instance relation once: it feeds BOTH the multiplicity aggregate and
-    the join back, and Spark does not reuse the subtree across those
-    consumers — without it the plan re-scans and re-chunks the whole corpus
-    a second time (caught by the plan audit, BENCH/PLANS.md). Set False
-    only when ``df`` is itself already a materialized relation cheap to
-    scan twice. A count-window over _ch would avoid the join but loses
-    map-side partial aggregation AND AQE skew-join splitting — at web scale
-    a boilerplate chunk with 10^9 occurrences must be splittable.
+    The narrow (id, hash, len) instance relation is materialized once: it
+    feeds BOTH the multiplicity aggregate and the join back, and Spark does
+    not reuse the subtree across those consumers — without it the plan
+    re-scans and re-chunks the whole corpus a second time (caught by the
+    plan audit, BENCH/PLANS.md). A count-window over _ch would avoid the
+    join but loses map-side partial aggregation AND AQE skew-join splitting
+    — at web scale a boilerplate chunk with 10^9 occurrences must be
+    splittable.
     """
     inst = chunk_instances(df, id_col, text_col, w, divisor, min_partitions).select(
         "_id",
         F.sha2(F.col("chunk"), 256).alias("_ch"),
         F.length("chunk").alias("_len"),
-    )
-    if checkpoint:
-        inst = inst.localCheckpoint()
+    ).localCheckpoint()
     mult = inst.groupBy("_ch").agg(F.count("*").alias("_m"))
     return (
         inst.join(mult, "_ch")

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import text
-from ..plans.partitioning import cap_hot_keys, fan_out_small_scan
+from ..plans.partitioning import bucket_self_join, fan_out_small_scan
 
 
 def edit_distance_pairs(
@@ -48,7 +48,6 @@ def edit_distance_pairs(
     q: int = 12,
     sample_mod: int = 8,
     anchor_cap: int | None = 256,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(a_id, b_id, edit_distance, score): pairs of docs whose normalized
     texts are within ``max_dist`` Levenshtein edits, found via mod-sampled
@@ -88,24 +87,14 @@ def edit_distance_pairs(
         .filter(F.pmod("_h", F.lit(sample_mod)) == 0)
         .dropDuplicates(["_id", "_h"])
     )
-    if checkpoint:
-        # The anchor relation feeds two consumers (the hot-gram cap's size
-        # groupBy and join, or both self-join sides when uncapped) — without
-        # this the md5-gram explode re-executes per consumer. Opt out for
-        # single-pass/small inputs (the simhash/setsim knob convention).
-        anchors = anchors.localCheckpoint()
-    anchors, _ = cap_hot_keys(anchors, ["_h"], anchor_cap)
-
-    a = anchors.select(
-        F.col("_id").alias("a_id"), F.col("_n").alias("_na"), "_h"
-    )
-    b = anchors.select(
-        F.col("_id").alias("b_id"), F.col("_n").alias("_nb"), "_h"
+    # The anchor relation feeds two consumers (the hot-gram cap's size
+    # groupBy and join, or both self-join sides when uncapped) — without
+    # this the md5-gram explode re-executes per consumer.
+    pairs, _, _ = bucket_self_join(
+        anchors.localCheckpoint(), ["_h"], anchor_cap, carry=("_n",)
     )
     cand = (
-        a.join(b, "_h")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(F.abs(F.col("_na") - F.col("_nb")) <= max_dist)
+        pairs.filter(F.abs(F.col("_na") - F.col("_nb")) <= max_dist)
         .select("a_id", "b_id")
         .dropDuplicates(["a_id", "b_id"])
     )

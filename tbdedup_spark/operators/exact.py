@@ -50,7 +50,7 @@ def signatures(images: DataFrame, include_canonical: bool = True) -> DataFrame:
     return images.select(*cols)
 
 
-def exact_pairs(sigs: DataFrame, key: str = "sig") -> DataFrame:
+def exact_pairs(sigs: DataFrame) -> DataFrame:
     """Duplicate edges from signature groups, as star edges to the group min.
 
     Star edges (member ↔ min(member)) carry the same connectivity as the full
@@ -61,10 +61,10 @@ def exact_pairs(sigs: DataFrame, key: str = "sig") -> DataFrame:
     signature group on one task; the groupBy gets map-side combine and the
     equi-join back is AQE-skew-splittable.
     """
-    narrow = sigs.select("image_id", key)
-    reps = narrow.groupBy(key).agg(F.min("image_id").alias("rep"))
+    narrow = sigs.select("image_id", "sig")
+    reps = narrow.groupBy("sig").agg(F.min("image_id").alias("rep"))
     return (
-        narrow.join(reps, key)
+        narrow.join(reps, "sig")
         .filter(F.col("image_id") != F.col("rep"))
         .select(
             F.col("rep").alias("a_id"),

@@ -17,10 +17,13 @@ formulas run on DuckDB for the correctness oracle):
               └─Jaccard verify join (hash-set arrays)   [shuffle 3: by id]
 
 Skew handling (north_rule requirement): a degenerate band key (e.g. every
-caption sharing a stop-phrase) creates a quadratic bucket. ``max_bucket``
-caps explosion — buckets larger than the cap are *dropped and counted*
+caption sharing a stop-phrase) creates a quadratic bucket. The band join is
+``plans.partitioning.bucket_self_join``, whose rule is the same at every
+bucketed site: buckets larger than ``max_bucket`` are *dropped and counted*
 (the honest trade: at web scale a universal bucket is a stop-word bucket;
-its pairs are recovered by the other detectors or a higher-r config). AQE
+its pairs are recovered by the other detectors or a higher-r config), and
+kept buckets larger than ``SALT_ABOVE`` are salted into ``SALT_CHUNKS``
+chunks, the same pairs from ~S(S+1)/2 join cells instead of one task. AQE
 skew-join splitting handles residual imbalance.
 """
 
@@ -30,9 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text
-from ..plans.partitioning import cap_hot_keys, fan_out_small_scan
-
-SALT_CHUNKS = 8  # salted regime: chunk ids per hot bucket (~S(S+1)/2 join cells)
+from ..plans.partitioning import bucket_self_join, fan_out_small_scan
 
 
 def exploded_shingles(
@@ -208,7 +209,6 @@ def est_jaccard(mh_a: str, mh_b: str) -> Column:
 def candidate_pairs(
     banded: DataFrame,
     max_bucket: int | None = 64,
-    salt_cap: int | None = None,
     est_tau: float | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Self-join per (band_idx, band_key); returns (pairs, dropped_buckets).
@@ -223,92 +223,19 @@ def candidate_pairs(
     dropDuplicates shuffle or the verify joins, at the price of carrying
     ~n_perm*8 bytes per band row into the join inputs.
 
-    Three bucket regimes (the north_rule's skew ladder):
-
-    * size <= max_bucket — plain band-key self-join.
-    * max_bucket < size <= salt_cap (when set) — SALTED self-join: members
-      get a chunk id ``hash(id) % SALT_CHUNKS``; the left side is
-      replicated to every chunk >= its own and the join key becomes (band,
-      chunk) — one quadratic bucket becomes ~S(S+1)/2 independent join
-      cells that schedule across the cluster instead of one monster task.
-      Same pair set, ~S/2x replication of the narrow (id, band) rows.
-    * size > cap — dropped AND REPORTED via ``dropped_buckets`` (band_idx,
-      band_key, bucket_size): at web scale the mega-bucket is a stop-phrase
-      bucket; its pairs are either worthless or recovered by the exact/
-      caption-signature detector's star edges. Never silent.
+    Buckets above ``max_bucket`` are dropped AND REPORTED via
+    ``dropped_buckets`` (band_idx, band_key, bucket_size); kept buckets
+    above ``partitioning.SALT_ABOVE`` are salted (see the module docstring).
     """
-    if max_bucket is not None and max_bucket < 1:
-        # checked here, not only in cap_hot_keys: with salt_cap set the
-        # shared cap sees salt_cap, and 0 would empty the plain regime
-        raise ValueError(f"max_bucket must be >= 1 or None (uncapped), got {max_bucket}")
-    if salt_cap is not None and max_bucket is not None and salt_cap <= max_bucket:
-        raise ValueError(
-            f"salt_cap ({salt_cap}) must exceed max_bucket ({max_bucket}): the salted "
-            "regime covers bucket sizes in (max_bucket, salt_cap]; salt_cap <= "
-            "max_bucket would silently disable it while mis-reporting dropped mass"
-        )
-    # max_bucket=None with salt_cap set is fine, not silent loss: uncapped
-    # mode emits EVERY pair (a superset of any salted plan), so the salting
-    # request is moot rather than ignored-with-missing-pairs.
-
     carry = est_tau is not None
     if carry and "_mh" not in banded.columns:
         raise ValueError("est_tau requires banded rows built with carry_mh=True")
-    _est = est_jaccard("_mha", "_mhb")
-
-    def _side(df, idn, mhn):
-        cols = [F.col("_id").alias(idn), "band_idx", "band_key"]
-        if carry:
-            cols.append(F.col("_mh").alias(mhn))
-        return df.select(*cols)
-
-    # one sizing pass feeds all three regimes and the dropped report
-    salted = max_bucket is not None and salt_cap is not None
-    sized, dropped = cap_hot_keys(
-        banded, ["band_idx", "band_key"], salt_cap if salted else max_bucket
-    )
-    kept = sized.filter(F.col("_bsz") <= max_bucket) if salted else sized
-    pairs = (
-        _side(kept, "a_id", "_mha")
-        .join(_side(kept, "b_id", "_mhb"), ["band_idx", "band_key"])
-        .filter(F.col("a_id") < F.col("b_id"))
+    pairs, _, dropped = bucket_self_join(
+        banded, ["band_idx", "band_key"], max_bucket, carry=("_mh",) if carry else ()
     )
     if carry:
-        pairs = pairs.filter(_est >= est_tau)
-    pairs = pairs.select("a_id", "b_id")
-
-    if salted:
-        hot = sized.filter(F.col("_bsz") > max_bucket).withColumn(
-            "_chunk", F.pmod(F.xxhash64("_id"), F.lit(SALT_CHUNKS))
-        )
-        # left side replicated to every chunk >= its own; right side keyed
-        # by its own chunk -> join cell (band, cb) holds chunk pair (ca, cb)
-        chunks = F.array(*[F.lit(j) for j in range(SALT_CHUNKS)])
-        ha_cols = [F.col("_id").alias("a_id"), "band_idx", "band_key", F.col("_chunk").alias("_ca")]
-        hb_cols = [F.col("_id").alias("b_id"), "band_idx", "band_key", F.col("_chunk").alias("_cb")]
-        if carry:
-            ha_cols.append(F.col("_mh").alias("_mha"))
-            hb_cols.append(F.col("_mh").alias("_mhb"))
-        ha = (
-            hot.select(*ha_cols)
-            .withColumn("_cb", F.explode(chunks))
-            .filter(F.col("_cb") >= F.col("_ca"))
-        )
-        hb = hot.select(*hb_cols)
-        # normalize with least/greatest, NOT a_id < b_id: a pair whose
-        # smaller id sits in the higher chunk only appears as (big, small)
-        hot_pairs = ha.join(hb, ["band_idx", "band_key", "_cb"]).filter(
-            F.col("a_id") != F.col("b_id")
-        )
-        if carry:
-            hot_pairs = hot_pairs.filter(_est >= est_tau)
-        hot_pairs = hot_pairs.select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-        )
-        pairs = pairs.unionByName(hot_pairs)
-
-    return pairs.dropDuplicates(["a_id", "b_id"]), dropped
+        pairs = pairs.filter(est_jaccard("_mha", "_mhb") >= est_tau)
+    return pairs.select("a_id", "b_id").dropDuplicates(["a_id", "b_id"]), dropped
 
 
 def verify_jaccard(pairs: DataFrame, sigs: DataFrame, tau: float = 0.6) -> DataFrame:
@@ -364,7 +291,6 @@ def minhash_pairs(
     tau: float = 0.6,
     seed: int = 42,
     max_bucket: int | None = 64,
-    salt_cap: int | None = None,
     hash_fn=None,
     est_tau: float | None = None,
     carry: str = "hashes",
@@ -388,5 +314,5 @@ def minhash_pairs(
     banded = band_keys(
         sigs, n_perm, n_bands, carry_mh=est_tau is not None, hash_keys=True
     )
-    cand, dropped = candidate_pairs(banded, max_bucket, salt_cap, est_tau=est_tau)
+    cand, dropped = candidate_pairs(banded, max_bucket, est_tau=est_tau)
     return verify_jaccard(cand, sigs, tau), dropped

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .. import codecs
-from ..plans.partitioning import cap_hot_keys
+from ..plans.partitioning import bucket_self_join
 
 IMAGE_FEATURES = T.StructType(
     [
@@ -671,13 +671,9 @@ def crop_resistant_near_dups(
         sigs = sigs.localCheckpoint()  # feeds the counts and the cap
 
     cnt = sigs.groupBy("image_id").agg(F.count(F.lit(1)).alias("_n"))
-    kept, _ = cap_hot_keys(sigs, ["psig"], max_bucket)
-    a = kept.select(F.col("image_id").alias("a_id"), "psig")
-    b = kept.select(F.col("image_id").alias("b_id"), "psig")
+    pairs, _, _ = bucket_self_join(sigs, ["psig"], max_bucket, id_col="image_id")
     pairs = (
-        a.join(b, "psig")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
+        pairs.groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
     )

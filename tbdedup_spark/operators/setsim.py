@@ -25,11 +25,12 @@ by the suffix mass (~(1−τ)·|tokens| fewer rows at τ=0.5, more at higher τ)
 The window partition key is the doc id — bounded by doc length, so no
 hot-key risk (the repo's window convention, operators/asof.py:10-12).
 
-Skew valve (the shared hot-key cap, plans/partitioning.cap_hot_keys): a
-universal prefix token (stopword that survives into prefixes of short docs)
-creates a quadratic postings join. ``prefix_cap`` drops tokens whose
-postings list exceeds the cap from the candidate join — dropped AND
-reported via the second returned relation, never silent. Recall is only
+Skew valve (the shared bucketed self-join,
+plans/partitioning.bucket_self_join): a universal prefix token (stopword
+that survives into prefixes of short docs) creates a quadratic postings
+join. ``prefix_cap`` drops tokens whose postings list exceeds the cap from
+the candidate join — dropped AND reported via the second returned relation,
+never silent — and salts the kept lists above ``SALT_ABOVE``. Recall is only
 lost for pairs whose EVERY shared prefix token is hot; precision is
 untouched (the exact verify runs regardless).
 """
@@ -39,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.partitioning import cap_hot_keys
+from ..plans.partitioning import bucket_self_join
 
 
 def jaccard_pairs(
@@ -99,7 +100,9 @@ def jaccard_pairs(
     if checkpoint:
         prefix = prefix.localCheckpoint()
 
-    prefix, dropped = cap_hot_keys(prefix, ["_tok", *blocks], prefix_cap)
+    cand, _, dropped = bucket_self_join(
+        prefix, ["_tok", *blocks], prefix_cap, carry=("_sz", "_rn")
+    )
     dropped = dropped.select(
         F.col("_tok").alias("token"), *blocks, F.col("bucket_size").alias("postings")
     )
@@ -130,19 +133,7 @@ def jaccard_pairs(
         F.col("_sza") - F.col("_rna"), F.col("_szb") - F.col("_rnb")
     )
     cand = (
-        prefix.select(
-            F.col("_id").alias("a_id"), *blocks, "_tok",
-            F.col("_sz").alias("_sza"), F.col("_rn").alias("_rna"),
-        )
-        .join(
-            prefix.select(
-                F.col("_id").alias("b_id"), *blocks, "_tok",
-                F.col("_sz").alias("_szb"), F.col("_rn").alias("_rnb"),
-            ),
-            ["_tok", *blocks],
-        )
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(F.col("_szb") >= F.ceil(F.lit(tau) * F.col("_sza") - F.lit(1e-9)))
+        cand.filter(F.col("_szb") >= F.ceil(F.lit(tau) * F.col("_sza") - F.lit(1e-9)))
         .filter(F.col("_sza") >= F.ceil(F.lit(tau) * F.col("_szb") - F.lit(1e-9)))
         .filter(_ub >= _req)
         .select("a_id", "b_id")

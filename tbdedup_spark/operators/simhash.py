@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text
-from ..plans.partitioning import cap_hot_keys, fan_out_small_scan
+from ..plans.partitioning import bucket_self_join, fan_out_small_scan
 
 
 def hamming_bands(
@@ -55,8 +55,9 @@ def simhash_pairs(
     """(pairs, dropped_buckets). Completeness: guaranteed for
     max_hamming <= n_bands - 1 (pigeonhole); the residual filter enforces the
     exact bound either way. Hot buckets (e.g. flat images all hashing to 0)
-    are size-capped and reported by ``plans.partitioning.cap_hot_keys``;
-    ``max_bucket=None`` (oracle mode) sizes nothing.
+    are size-capped, reported and salted by
+    ``plans.partitioning.bucket_self_join``; ``max_bucket=None`` (oracle
+    mode) sizes nothing.
 
     ``checkpoint=True`` materializes the narrow banded relation (id, sig,
     band_idx, band_bits) before it fans out. The banded subtree is consumed
@@ -75,13 +76,11 @@ def simhash_pairs(
     banded = hamming_bands(df, id_col, sig_col, n_bands, width)
     if checkpoint:
         banded = banded.localCheckpoint()
-    kept, dropped = cap_hot_keys(banded, ["band_idx", "band_bits"], max_bucket)
-    a = kept.select(F.col("_id").alias("a_id"), F.col("_sig").alias("_siga"), "band_idx", "band_bits")
-    b = kept.select(F.col("_id").alias("b_id"), F.col("_sig").alias("_sigb"), "band_idx", "band_bits")
+    pairs, _, dropped = bucket_self_join(
+        banded, ["band_idx", "band_bits"], max_bucket, carry=("_sig",)
+    )
     pairs = (
-        a.join(b, ["band_idx", "band_bits"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("_ham", F.bit_count(F.col("_siga").bitwiseXOR(F.col("_sigb"))))
+        pairs.withColumn("_ham", F.bit_count(F.col("_siga").bitwiseXOR(F.col("_sigb"))))
         .filter(F.col("_ham") <= max_hamming)
         .select(
             "a_id",

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tbdedup_spark.functions import text
-from tbdedup_spark.plans.partitioning import cap_hot_keys, fan_out_small_scan
+from tbdedup_spark.plans.partitioning import bucket_self_join, fan_out_small_scan
 
 POS_ENC = 4_294_967_296  # 2^32: (hash, pos) packed into one orderable int64
 
@@ -97,7 +97,6 @@ def winnow_dup_pairs(
     df_cap: int = 50,
     min_shared: int = 3,
     tau: float = 0.5,
-    hash_fn=None,
 ) -> DataFrame:
     """MOSS-style near-dup pairs: (id_a, id_b, n_shared, fp_jaccard) for
     document pairs whose winnowing-fingerprint sets overlap with Jaccard
@@ -132,19 +131,15 @@ def winnow_dup_pairs(
     # whole subtree re-executing per consumer (8 scans/8 windows in one plan,
     # plans/r06/winnow_dup_pairs_before.txt). (id, fp) is 16 bytes/row.
     sets = (
-        winnow_fingerprints(df, id_col, text_col, k, w, hash_fn)
+        winnow_fingerprints(df, id_col, text_col, k, w)
         .select(id_col, "fp")
         .distinct()
         .localCheckpoint()
     )
-    kept, _ = cap_hot_keys(sets, ["fp"], df_cap)
+    pairs, kept, _ = bucket_self_join(sets, ["fp"], df_cap, id_col=id_col)
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("nfp"))
-    a = kept.select(F.col("fp"), F.col(id_col).alias("id_a"))
-    b = kept.select(F.col("fp"), F.col(id_col).alias("id_b"))
     pairs = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
+        pairs.groupBy(F.col("a_id").alias("id_a"), F.col("b_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..functions import text
 from ..operators import exact, minhash, simhash, substr, unionfind, verify
 from ..sources.catalog import Catalog, config_run_id
-from .partitioning import dropped_groups
+from .partitioning import dropped_groups, dropped_rows
 
 # the detector names pairs_all's rows carry, one per detector stage
 DETECTORS = ("exact", "minhash", "simhash", "substr")
@@ -55,9 +55,12 @@ class DedupConfig:
     # and therefore config_run_id for EVERY pre-existing config, including
     # the default "" — warehouses committed before the field existed will
     # not resume (their run dirs are orphaned, recompute is safe but full).
-    # Removing minhash_salt_chunks (now minhash.SALT_CHUNKS = 8) and
+    # Removing minhash_salt_chunks (now partitioning.SALT_CHUNKS = 8) and
     # substr_winnow_w (always 1; the winnowing branch is gone) changed the
     # run id the same way: warehouses committed with those fields recompute.
+    # So did removing minhash_salt_cap (salting is now the one rule of
+    # partitioning.bucket_self_join) and raising minhash_max_bucket from 64
+    # to 1024 (the same pair set: buckets up to 1024 were salted before).
     dataset_id: str = ""
     shingle_k: int = 5
     n_perm: int = 16
@@ -65,8 +68,7 @@ class DedupConfig:
     jaccard_tau: float = 0.6
     phash_bands: int = 8
     phash_max_hamming: int = 7
-    minhash_max_bucket: int = 64
-    minhash_salt_cap: int = 1024   # buckets up to here: salted self-join
+    minhash_max_bucket: int = 1024
     # estimated-Jaccard prefilter before the exact verify join (fraction of
     # equal minhash coords); ~tau/2 = 3+ sigma below tau at n_perm=16, so
     # true pairs pass w.p. ~1-1e-5 while collision junk (J ~ 0.05) dies.
@@ -149,20 +151,23 @@ def run_pipeline(
             if sanity.counts_diverge:
                 cat.log_metric("signatures", "dual_hash_counts_diverge", 1.0)
 
+    def _log_dropped(stage, dropped):
+        cat.log_metric(stage, "dropped_buckets", dropped_groups(dropped))
+        cat.log_metric(stage, "dropped_rows", dropped_rows(dropped))
+
     def _mh():
         pairs, dropped = minhash.minhash_pairs(
             sigs_ok, "image_id", "caption",
             k=config.shingle_k, n_perm=config.n_perm, n_bands=config.n_bands,
             tau=config.jaccard_tau, seed=config.seed,
             max_bucket=config.minhash_max_bucket,
-            salt_cap=config.minhash_salt_cap,
             hash_fn=text.hash32,  # throughput-grade; oracle queries pass md5
             est_tau=config.minhash_est_tau,
             # int sets, not strings/longs: the fat shuffle column, and the
             # bijective int32 fold keeps verify Jaccard exactly equal
             carry="hashes32",
         )
-        cat.log_metric("pairs_minhash", "dropped_buckets", dropped_groups(dropped))
+        _log_dropped("pairs_minhash", dropped)
         return pairs
 
     def _sh():
@@ -171,7 +176,7 @@ def run_pipeline(
             max_hamming=config.phash_max_hamming, n_bands=config.phash_bands,
             max_bucket=config.simhash_max_bucket,
         )
-        cat.log_metric("pairs_simhash", "dropped_buckets", dropped_groups(dropped))
+        _log_dropped("pairs_simhash", dropped)
         return pairs
 
     def _sub():

@@ -83,6 +83,9 @@ class Catalog:
         self.versioned = versioned and not iceberg  # Iceberg versions natively
         self.progress_interval = progress_interval
         self._ns = f"{iceberg_catalog}.{namespace}"
+        # schemas of the parquet tables this Catalog committed: read() passes
+        # them, so reading its own commits runs no schema-inference job
+        self._schemas: dict = {}
         if iceberg:
             if not iceberg_available(spark):
                 raise RuntimeError(
@@ -222,7 +225,9 @@ class Catalog:
             )
         if snapshot_id is not None:
             raise ValueError("snapshot reads need versioned=True (or Iceberg)")
-        return self.spark.read.parquet(self._path(table))
+        known = self._schemas.get(table)
+        reader = self.spark.read if known is None else self.spark.read.schema(known)
+        return reader.parquet(self._path(table))
 
     def write(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> int:
         """Commit a stage output; returns row count. In parquet mode the
@@ -265,6 +270,8 @@ class Catalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+        if not partition_by:  # partition columns come back re-typed and last
+            self._schemas[table] = df.schema
         n = self._footer_count(path)
         if n is None:
             # warehouse not driver-local POSIX (object store / DFS paths):

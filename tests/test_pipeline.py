@@ -16,9 +16,9 @@ from tbdedup_spark.sources.catalog import config_run_id
 # At this scale every stage is latency-bound, so jobs are the cost unit: a
 # change that cuts jobs lowers its entry, one that adds jobs says why.
 JOB_BUDGET = {
-    "signatures": 2, "pairs_exact": 3, "pairs_minhash": 10, "pairs_simhash": 6,
+    "signatures": 2, "pairs_exact": 3, "pairs_minhash": 9, "pairs_simhash": 6,
     "pairs_substr": 12, "pairs_all": 2, "clusters": 4, "verify_checked": 8,
-    "clusters_verified": 3, "ungrouped": 17,
+    "clusters_verified": 3, "ungrouped": 7,
 }
 
 
@@ -207,3 +207,28 @@ def test_pipeline_job_budget(spark, images, tmp_path):
     used = {s: len(after[s] - before[s]) for s in JOB_BUDGET}
     over = {s: (n, JOB_BUDGET[s]) for s, n in used.items() if n > JOB_BUDGET[s]}
     assert not over, f"(jobs, budget) over budget: {over}"
+
+
+def test_stage_reads_pass_the_inferred_schema(spark, images, tmp_path, monkeypatch):
+    """Catalog.read passes the schema Catalog.write recorded, so reading a
+    committed stage runs no inference job; for every table run_pipeline
+    reads back, that schema equals the one parquet inference finds."""
+    from tbdedup_spark.sources.catalog import Catalog
+
+    reads = []
+    read = Catalog.read
+
+    def spy(self, table, snapshot_id=None):
+        out = read(self, table, snapshot_id)
+        reads.append((self, table, out))
+        return out
+
+    monkeypatch.setattr(Catalog, "read", spy)
+    run_pipeline(spark, images, str(tmp_path / "wh"))
+    [cat] = {c for c, _, _ in reads}
+    committed = set(cat.list_tables())
+    assert {"signatures", "pairs_minhash", "clusters"} <= committed
+    assert {t for _, t, _ in reads} == committed
+    for _, table, df in reads:
+        assert table in cat._schemas, f"{table} was read with inference"
+        assert df.schema == spark.read.parquet(cat._path(table)).schema, table

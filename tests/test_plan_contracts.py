@@ -195,3 +195,22 @@ def test_capped_sizing_plan_only_adds_collect_metrics(spark, monkeypatch, tmp_pa
     assert sum(n.startswith("CollectMetrics") for n in nodes) == 1
     assert [n for n in nodes if not n.startswith("CollectMetrics")] == _plan_nodes(plain)
     assert any("PushedFilters: [IsNotNull(sig), GreaterThanOrEqual(sig,1)]" in n for n in nodes)
+
+
+def test_bucket_self_join_builds_one_join_without_hot_buckets(spark, monkeypatch):
+    """With no kept bucket above SALT_ABOVE (observed by the sizing job
+    the cap already runs), the pairs plan holds exactly one bucket join: the
+    salted branch is not built. Lowering SALT_ABOVE under the largest
+    bucket adds the salted join, and the uncapped mode never salts."""
+    from tbdedup_spark.plans import partitioning
+
+    rel = spark.createDataFrame([(i, i % 5) for i in range(40)], "_id long, k long")
+
+    def joins(cap):
+        pairs = partitioning.bucket_self_join(rel, ["k"], cap)[0]
+        return pairs._jdf.queryExecution().optimizedPlan().toString().count("Join Inner")
+
+    assert joins(64) == 1
+    monkeypatch.setattr(partitioning, "SALT_ABOVE", 4)
+    assert joins(64) == 2
+    assert joins(None) == 1

@@ -1,6 +1,5 @@
 """Round-2 regression tests: the ADVICE.md contract bugs (short-doc
-containment, DECODE_ERROR sentinel collisions, salt_cap validation, sampled
-index recall), the est-Jaccard prefilter equivalence, prefix-filtered set-similarity
+containment, DECODE_ERROR sentinel collisions, sampled index recall), the est-Jaccard prefilter equivalence, prefix-filtered set-similarity
 join, durable union-find checkpoint/resume, and quarantine evidence."""
 
 import numpy as np
@@ -89,7 +88,7 @@ def test_containment_mod_sampling_exact(spark, images, golden, m):
     assert got == oracle
 
 
-# --- minhash: est-J prefilter + salt_cap validation ---------------------------
+# --- minhash: est-J prefilter -------------------------------------------------
 
 
 def test_minhash_est_prefilter_identical_output(spark, images):
@@ -98,12 +97,6 @@ def test_minhash_est_prefilter_identical_output(spark, images):
     a = {(r.a_id, r.b_id) for r in ref.collect()}
     b = {(r.a_id, r.b_id) for r in fast.collect()}
     assert a == b
-
-
-def test_minhash_salt_cap_validation(spark, images):
-    banded = spark.createDataFrame([("x", 0, "k")], ["_id", "band_idx", "band_key"])
-    with pytest.raises(ValueError):
-        minhash.candidate_pairs(banded, max_bucket=64, salt_cap=64)
 
 
 # --- prefix-filtered set-similarity join --------------------------------------
