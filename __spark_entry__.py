@@ -211,22 +211,15 @@ def _minhash_pairs_df(spark, sf_dir):
     Together: the fat array join sees ~50k survivors instead of 3.25M
     candidates at sf0.1 (and the candidate relation itself never carries
     arrays). The uncapped band join stays the oracle-scale config;
-    plans/pipeline.py remains the capped/salted 100-TB path."""
+    plans/pipeline.py remains the capped/salted 100-TB path. The est
+    prefilter runs INSIDE the band self-join over the raw coords the oracle
+    grade carries, so junk dies before the candidate dropDuplicates
+    exchange (measured 3.25M -> 388k rows into it; plan 6 joins -> 4)."""
     d = _t(spark, sf_dir, "documents")
-    sigs = minhash.minhash_signatures(
-        d, "doc_id", "text", K, N_PERM, SEED, carry="hashes"
-    ).localCheckpoint()  # feeds banding + hash-set verify join (x2)
-    # est prefilter INSIDE the band self-join (r6): the RAW coords ride the
-    # band rows (fold_mh=False keeps the coord-equality count bit-identical
-    # to the oracle's), so ~90% of bucket-collision junk dies before the
-    # candidate dropDuplicates exchange instead of after it — measured
-    # 3.25M -> 388k rows into that exchange, and the two est attach joins
-    # the old post-join prefilter needed are gone (plan: 6 joins -> 4).
-    # Same pair set by construction: est is a pure function of the pair and
-    # commutes with the dedup.
-    banded = minhash.band_keys(sigs, N_PERM, N_BANDS, carry_mh=True, fold_mh=False)
-    cand, _ = minhash.candidate_pairs(banded, max_bucket=None, est_tau=MIN_EQ / N_PERM)
-    return minhash.verify_jaccard(cand, sigs, TAU)
+    return minhash.minhash_pairs(
+        d, "doc_id", "text", K, N_PERM, N_BANDS, TAU, SEED,
+        max_bucket=None, est_tau=MIN_EQ / N_PERM,
+    )[0]
 
 
 def _q_minhash(spark, sf_dir):
@@ -920,10 +913,9 @@ def _q_winnowing_fingerprints(spark, sf_dir):
     never corpus size, so there is no hot key by construction; the final
     DISTINCT is the only corpus-wide shuffle and it runs on 3 small int
     columns. At 10^12 docs this is embarrassingly parallel per doc.
-    Uses the oracle-grade hash60; operators/winnow.py documents the
-    hash32 throughput path. Reference analog: the canonical-signature
-    stage (tbdedup/dedup/hashing, SURVEY O4) refined from whole-message
-    to positional substring granularity."""
+    Uses hash60, which the oracle mirrors. Reference analog: the
+    canonical-signature stage (tbdedup/dedup/hashing, SURVEY O4) refined
+    from whole-message to positional substring granularity."""
     from tbdedup_spark.operators import winnow
 
     d = _t(spark, sf_dir, "documents").select(
@@ -1983,8 +1975,7 @@ def _q_cdc_chunk_dedup(spark, sf_dir):
     agg; text never shuffles. Oracle: the identical md5-position algebra
     as DuckDB list_filter/list_transform SQL."""
     return cdc.chunk_stats(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", w=CDC_W, divisor=CDC_D,
-        min_partitions=spark.sparkContext.defaultParallelism,
+        _t(spark, sf_dir, "documents"), "doc_id", "text", w=CDC_W, divisor=CDC_D
     )
 
 

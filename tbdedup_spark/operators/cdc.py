@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text
+from ..plans.partitioning import fan_out_small_scan
 
 
 def chunk_instances(
@@ -50,7 +51,6 @@ def chunk_instances(
     text_col: str = "text",
     w: int = 16,
     divisor: int = 64,
-    min_partitions: int | None = None,
 ) -> DataFrame:
     """(_id, chunk): one row per chunk instance, chunks partition each doc.
 
@@ -60,18 +60,14 @@ def chunk_instances(
     ~``divisor`` chars plus the window ramp-in. Docs shorter than w yield
     one whole-doc chunk; empty/null docs yield no rows.
 
-    ``min_partitions``: the boundary projection is CPU-heavy (one md5 per
-    character) and runs at the SCAN's parallelism — a small-file corpus
-    (one parquet split) would run it serially. Set to the session's core
-    count to repartition the narrow (id, text) base first; leave None at
-    real corpus scale, where splits are plentiful and the extra text
-    shuffle is pure cost.
+    The boundary projection is CPU-heavy (one md5 per character) and runs at
+    the scan's parallelism, so the narrow (id, text) base is fanned out when
+    the scan under-splits (plans/partitioning.py; no-op at corpus scale).
     """
-    base = df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
-    ).filter(F.length("_t") > 0)
-    if min_partitions is not None:
-        base = base.repartition(min_partitions)
+    base = fan_out_small_scan(
+        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+        .filter(F.length("_t") > 0)
+    )
     n = F.length(F.col("_t"))
     bounds = F.filter(
         F.sequence(F.lit(1), n),
@@ -102,7 +98,6 @@ def chunk_stats(
     text_col: str = "text",
     w: int = 16,
     divisor: int = 64,
-    min_partitions: int | None = None,
 ) -> DataFrame:
     """Per-doc chunk-dedup profile: (id_col, n_chunks, dup_chunks,
     dup_chars) where a chunk instance is 'dup' iff its sha256 occurs >= 2
@@ -119,7 +114,7 @@ def chunk_stats(
     — at web scale a boilerplate chunk with 10^9 occurrences must be
     splittable.
     """
-    inst = chunk_instances(df, id_col, text_col, w, divisor, min_partitions).select(
+    inst = chunk_instances(df, id_col, text_col, w, divisor).select(
         "_id",
         F.sha2(F.col("chunk"), 256).alias("_ch"),
         F.length("chunk").alias("_len"),

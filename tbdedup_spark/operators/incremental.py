@@ -25,11 +25,11 @@ AQE decide from runtime sizes — when the batch-derived bound exceeds
 joins instead of a forced-broadcast driver/executor OOM. The one history-sized
 aggregation is the MinHash signature groupBy, and it must NOT be paid per
 batch: pass ``hist_mh_sigs`` (history's signature table, persisted once
-from ``minhash.minhash_signatures`` with the default md5 hash and
-``carry="hashes"``) and the operator reads it instead of recomputing;
-recomputation from ``hist_df`` is the convenience path for one-shot use.
-plans/pipeline.py commits no such table: its detector's crc32/int32
-signatures would never match these md5 bands.
+from ``minhash.minhash_signatures`` in the oracle grade, ``carry="hashes"``)
+and the operator reads it instead of recomputing; recomputation from
+``hist_df`` is the convenience path for one-shot use. plans/pipeline.py
+commits no such table: its detector's throughput grade
+(``carry="hashes32"``) would never match these bands.
 
 Within-batch duplicates are intentionally out of scope — tier verdicts are
 vs HISTORY only; run ``operators/exact`` on the batch for that.
@@ -123,7 +123,7 @@ def candidate_pairs_cross(
 
 def _check_hist_mh_sigs(sigs: DataFrame, n_perm: int) -> None:
     """``hist_mh_sigs`` must be a ``minhash_signatures(carry="hashes")``
-    relation: any other carry (the pipeline's int32 sets) or a narrower
+    relation: the throughput grade (the pipeline's int32 sets) or a narrower
     signature would silently never match this operator's bands and sets."""
     cols = set(sigs.columns)
     missing = [c for c in ["_id", *(f"mh{j}" for j in range(n_perm))] if c not in cols]
@@ -200,13 +200,13 @@ def tiered_dedup(
     new_sigs = new_df.select(F.col(id_col).alias("_id"), sig.alias("_sig"))
     hist_sigs = hist_df.select(F.col(id_col).alias("_id"), sig.alias("_sig"))
     exact_ids = exact_matches(new_sigs, hist_sigs, hint=hint_ids)
-    # est prefilter INSIDE the cross join (raw coords — bit-exact vs the
-    # oracle's coord-equality count); verify_jaccard then only does the
-    # exact hash-set check. Band rows carry n_perm longs extra, still
-    # batch-bounded on the broadcast side.
+    # est prefilter INSIDE the cross join (the oracle grade carries raw
+    # coords — bit-exact vs the oracle's coord-equality count);
+    # verify_jaccard then only does the exact hash-set check. Band rows
+    # carry n_perm longs extra, still batch-bounded on the broadcast side.
     cand = candidate_pairs_cross(
-        minhash.band_keys(mh_new, n_perm, n_bands, carry_mh=est_tau is not None, fold_mh=False),
-        minhash.band_keys(mh_hist, n_perm, n_bands, carry_mh=est_tau is not None, fold_mh=False),
+        minhash.band_keys(mh_new, n_perm, n_bands, carry_mh=est_tau is not None),
+        minhash.band_keys(mh_hist, n_perm, n_bands, carry_mh=est_tau is not None),
         hint=hint_band,
         est_tau=est_tau,
     )

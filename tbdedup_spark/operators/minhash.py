@@ -25,12 +25,23 @@ its pairs are recovered by the other detectors or a higher-r config), and
 kept buckets larger than ``SALT_ABOVE`` are salted into ``SALT_CHUNKS``
 chunks, the same pairs from ~S(S+1)/2 join cells instead of one task. AQE
 skew-join splitting handles residual imbalance.
+
+Two grades, named by ``minhash_signatures(carry=...)`` alone; ``band_keys``
+reads the grade back from the element type of the carried ``_shingles``:
+
+    carry       grade       hash          _shingles    band_key   _mh
+    "hashes"    oracle      md5 hash60    array<long>  concat_ws  raw coords
+    "hashes32"  throughput  crc32 hash32  array<int>   xxhash64   mod 2^31-1
+
+The oracle grade is what DuckDB restates bit for bit (the driver queries and
+the incremental tiers); the throughput grade is what the pipeline runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import text
 from ..plans.partitioning import bucket_self_join, fan_out_small_scan
@@ -76,45 +87,25 @@ def minhash_signatures(
     k: int = 5,
     n_perm: int = 16,
     seed: int = 42,
-    hash_fn=None,
     carry: str = "hashes",
 ) -> DataFrame:
     """(id, mh0..mh{n-1}, _shingles) — one explode + one groupBy(id).
 
     MinHash mins are over the shingle *multiset* (identical to set-mins);
     ``collect_set`` carries the distinct-hash array for the Jaccard verify
-    in the same aggregation pass — no second explode, no join.
-
-    ``carry="hashes"`` carries ``collect_set(_h)`` (array<long>): the set
-    column is the fat payload of this detector's every shuffle (the groupBy,
-    the signature checkpoint, and both verify joins; on a multi-executor
-    cluster those bytes cross JVMs), and packed longs are ~4x smaller than
-    UTF8 shingles with a far cheaper array_intersect. Jaccard over distinct
-    hashes equals Jaccard over shingles modulo hash collisions; with the
-    default md5 ``hash60`` DuckDB computes the same hashes, so oracle
-    queries stay bit-exact. ``carry="hashes32"`` halves the bytes again
-    (see below).
+    in the same aggregation pass — no second explode, no join. That set is
+    the fat payload of the detector's every shuffle, so it holds packed
+    hashes, not UTF8 shingles (Jaccard is unchanged up to hash collisions).
+    ``carry`` names the grade (module table): "hashes" is md5 ``hash60`` as
+    array<long>, which DuckDB computes bit for bit; "hashes32" is crc32
+    ``hash32`` (~100x cheaper, collisions only add candidates) as
+    array<int>, half the bytes again.
     """
-    hash_fn = hash_fn or text.hash60  # hash60: oracle-grade (DuckDB md5
-    # mirror); pass text.hash32 (crc32) in throughput paths — ~100x cheaper,
-    # python-mirrorable via zlib.crc32, collisions only add candidates
     if carry not in ("hashes", "hashes32"):
         # a typo ('hash32', 'hashes64') must not fall through to some other
         # carry silently (review catch) — reject it loudly
         raise ValueError(f'carry must be "hashes" | "hashes32", got {carry!r}')
-    if carry == "hashes32" and hash_fn is not text.hash32:
-        # the int32 fold below is a bijection of [0, 2^32) ONLY; a 60-bit
-        # hash would silently wrap, making the fold non-injective and the
-        # verify Jaccard wrong with no error (ADVICE r3). The check is an
-        # identity allowlist BY DESIGN (ADVICE r4): Column-valued hash fns
-        # carry no introspectable output domain, so "is the range 32-bit"
-        # cannot be validated structurally — text.hash32 is the one function
-        # this module ships with that contract, and a caller with another
-        # 32-bit hash should fold to int32 before calling (carry="hashes").
-        raise ValueError(
-            'carry="hashes32" requires hash_fn=text.hash32 (the only hash '
-            "with a declared 32-bit output domain; see source comment)"
-        )
+    hash_fn = text.hash32 if carry == "hashes32" else text.hash60
     exploded = exploded_shingles(df, id_col, text_col, k).withColumn(
         "_h", hash_fn("_sh")
     )
@@ -122,10 +113,8 @@ def minhash_signatures(
         # array<int> carry via a BIJECTIVE shift of the 32-bit crc32 domain
         # ([0, 2^32) -> int32): any bijection preserves set equality, so
         # intersect/union cardinalities — the verify Jaccard — are identical
-        # to the long form at half the bytes. This set column is the fat
-        # payload of the detector's every shuffle (measured 3.0 GB shuffle
-        # read in the verify+write stage of a 600k-row corpus). Requires a
-        # 32-bit base hash (hash_fn=text.hash32).
+        # to the long form at half the bytes (measured 3.0 GB shuffle read
+        # in the verify+write stage of a 600k-row corpus).
         carry_col = F.collect_set((F.col("_h") - F.lit(2147483648)).cast("int"))
     else:
         carry_col = F.collect_set("_h")
@@ -140,39 +129,30 @@ def band_keys(
     n_perm: int = 16,
     n_bands: int = 8,
     carry_mh: bool = False,
-    hash_keys: bool = False,
-    fold_mh: bool = True,
 ) -> DataFrame:
-    """(id, band_idx, band_key[, _mh]): concat r=n_perm/n_bands minhashes per band.
+    """(id, band_idx, band_key[, _mh]): r=n_perm/n_bands minhashes per band,
+    in the grade of ``sigs`` (its ``_shingles`` element type; module table).
 
     ``carry_mh`` adds the minhash vector to every band row so the bucket
-    self-join can estimate Jaccard INSIDE the join (see
-    ``candidate_pairs(est_tau=...)``) — carried as array<int> (each 61-bit
-    coord folded mod 2^31-1): the est filter only tests COORD EQUALITY, which
-    the fold preserves for true equals, and a false coord-equal (~2^-31 per
-    unequal coord) can only add a candidate for the exact verify to reject.
-    Half the bytes of the long form on the join's both sides.
-
-    ``fold_mh=False`` carries the RAW long coords instead: ~2x the bytes,
-    but the in-join est filter becomes BIT-EXACTLY the coord-equality count
-    the DuckDB oracle states (no fold collisions, however improbable) —
-    required when the est threshold is part of an oracle-mirrored contract
-    rather than a recall-safe prefilter.
-
-    ``hash_keys`` (throughput paths): band_key = xxhash64 of the band's
-    coords (8 bytes) instead of the "-"-joined decimal string (~40 bytes for
-    r=2 61-bit coords). A band-key hash collision merges two buckets —
-    adds candidates at ~2^-64 odds, removed by the exact verify. Oracle
-    paths keep strings: DuckDB mirrors concat_ws, not xxhash64."""
+    self-join can estimate Jaccard INSIDE the join (``candidate_pairs(
+    est_tau=...)``). The oracle grade keeps DuckDB's concat_ws keys and the
+    RAW coords, so the est filter is bit-exactly the oracle's coord-equality
+    count. The throughput grade halves the bytes: 8-byte xxhash64 keys (vs
+    ~40 for r=2 decimal coords) and coords folded mod 2^31-1 to int32.
+    Either collision (~2^-64 per key, ~2^-31 per unequal coord) only adds
+    candidates the exact verify removes; the fold keeps true equals equal.
+    """
     r = n_perm // n_bands
     if r * n_bands != n_perm:
         # ValueError, not assert: -O would silently band only the first
         # r*n_bands coordinates, dropping recall (review catch)
         raise ValueError(f"n_perm ({n_perm}) must be divisible by n_bands ({n_bands})")
-    if hash_keys:
-        key = lambda t: F.xxhash64(*[F.col(f"mh{t * r + j}") for j in range(r)])
+    throughput = sigs.schema["_shingles"].dataType.elementType == T.IntegerType()
+    band = lambda t: [F.col(f"mh{t * r + j}") for j in range(r)]
+    if throughput:
+        key = lambda t: F.xxhash64(*band(t))
     else:
-        key = lambda t: F.concat_ws("-", *[F.col(f"mh{t * r + j}") for j in range(r)])
+        key = lambda t: F.concat_ws("-", *band(t))
     bands = F.array(
         *[
             F.struct(F.lit(t).alias("band_idx"), key(t).alias("band_key"))
@@ -182,16 +162,11 @@ def band_keys(
     cols = [F.col("_id"), F.explode(bands).alias("b")]
     out = ["_id", F.col("b.band_idx").alias("band_idx"), F.col("b.band_key").alias("band_key")]
     if carry_mh:
-        if fold_mh:
-            mh_arr = F.array(
-                *[
-                    F.pmod(F.col(f"mh{j}"), F.lit(2147483647)).cast("int")
-                    for j in range(n_perm)
-                ]
-            )
+        if throughput:
+            mh = [F.pmod(F.col(f"mh{j}"), F.lit(2147483647)).cast("int") for j in range(n_perm)]
         else:
-            mh_arr = F.array(*[F.col(f"mh{j}") for j in range(n_perm)])
-        cols.insert(1, mh_arr.alias("_mh"))
+            mh = [F.col(f"mh{j}") for j in range(n_perm)]
+        cols.insert(1, F.array(*mh).alias("_mh"))
         out.insert(1, F.col("_mh"))
     return sigs.select(*cols).select(*out)
 
@@ -291,7 +266,6 @@ def minhash_pairs(
     tau: float = 0.6,
     seed: int = 42,
     max_bucket: int | None = 64,
-    hash_fn=None,
     est_tau: float | None = None,
     carry: str = "hashes",
 ) -> tuple[DataFrame, DataFrame]:
@@ -300,8 +274,8 @@ def minhash_pairs(
     The signature relation is materialized once (``localCheckpoint``) — it
     feeds three consumers (banding, and both sides of the Jaccard verify
     join); without it the explode+groupBy DAG re-executes per consumer.
-    Band keys are xxhash64 (``band_keys(hash_keys=True)``): 8-byte join keys,
-    and a key collision only adds candidates the exact verify removes.
+    ``carry`` picks the grade of the hashes, the band keys and the carried
+    coords alike (module docstring).
 
     ``est_tau`` is applied INSIDE the bucket self-join (candidate_pairs):
     the minhash vector rides the band rows and junk candidates die before
@@ -309,10 +283,8 @@ def minhash_pairs(
     combinatorics. verify_jaccard then does only the exact set verify.
     """
     sigs = minhash_signatures(
-        df, id_col, text_col, k, n_perm, seed, hash_fn, carry
+        df, id_col, text_col, k, n_perm, seed, carry
     ).localCheckpoint()
-    banded = band_keys(
-        sigs, n_perm, n_bands, carry_mh=est_tau is not None, hash_keys=True
-    )
+    banded = band_keys(sigs, n_perm, n_bands, carry_mh=est_tau is not None)
     cand, dropped = candidate_pairs(banded, max_bucket, est_tau=est_tau)
     return verify_jaccard(cand, sigs, tau), dropped

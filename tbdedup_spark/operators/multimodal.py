@@ -27,94 +27,9 @@ from pyspark.sql import types as T
 from .. import codecs
 from ..plans.partitioning import bucket_self_join
 
-IMAGE_FEATURES = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-        T.StructField("stddev", T.DoubleType()),
-        T.StructField("entropy_bits", T.DoubleType()),
-        T.StructField("phash", T.LongType()),
-        T.StructField("decode_ok", T.BooleanType()),
-    ]
-)
-
-
-def image_features(images: DataFrame) -> DataFrame:
-    """Decode + per-image feature extraction (map-only, Arrow batches).
-
-    Features: channel means, global stddev, an 8-bit-histogram entropy, and
-    a freshly computed pHash (lets callers validate a stored ``phash`` column
-    — the integrity-check spirit of the reference's verify-on-write,
-    tbdedup/dedup/__init__.py:142-151).
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for iid, raw in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    px = codecs.decode_image(bytes(raw))
-                    g = px.astype(np.float64)
-                    hist = np.bincount(px.reshape(-1), minlength=256)
-                    p = hist / hist.sum()
-                    ent = float(-(p[p > 0] * np.log2(p[p > 0])).sum())
-                    out.append(
-                        (iid, px.shape[1], px.shape[0],
-                         float(g[..., 0].mean()), float(g[..., 1].mean()),
-                         float(g[..., 2].mean()), float(g.std()), ent,
-                         codecs.phash64(px), True)
-                    )
-                except Exception:
-                    out.append((iid, None, None, None, None, None, None, None, None, False))
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_FEATURES.fields])
-
-    return images.select("image_id", "bytes").mapInPandas(fn, IMAGE_FEATURES)
-
-
-def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize, re-encoded as PNG — IMAGES-shaped output.
-
-    Map-only; the real-world version swaps the numpy kernel for a proper
-    resampler, the Spark plumbing is identical.
-    """
-    out_schema = images.select("image_id", "bytes", "w", "h").schema
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for iid, raw in zip(pdf["image_id"], pdf["bytes"]):
-                px = codecs.decode_image(bytes(raw))
-                h, w, _ = px.shape
-                yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-                xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-                small = px[yi][:, xi]
-                rows.append((iid, codecs.encode_png(small), out_w, out_h))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h"])
-
-    return images.select("image_id", "bytes", "w", "h").mapInPandas(fn, out_schema)
-
-
 # --- audio / video (plumbing real, codecs stubbed) ---------------------------
 
 _FAKE_VIDEO_MAGIC = b"FVID0001"  # our deterministic fake container
-
-AUDIO_FEATURES = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("peak", T.DoubleType()),
-        T.StructField("zcr", T.DoubleType()),
-        T.StructField("spectral_centroid_hz", T.DoubleType()),
-        T.StructField("decode_ok", T.BooleanType()),
-    ]
-)
 
 FRAME_SCHEMA = T.StructType(
     [
@@ -143,51 +58,6 @@ def decode_fake_video(data: bytes) -> list[np.ndarray]:
     n, w, h = struct.unpack(">HHH", data[8:14])
     raw = np.frombuffer(zlib.decompress(data[14:]), np.uint8)
     return list(raw.reshape(n, h, w, 3))
-
-
-def audio_features(media: DataFrame, id_col: str = "media_id", bytes_col: str = "bytes") -> DataFrame:
-    """REAL audio decode + features over PCM16 WAV binary columns (RIFF is
-    parseable with struct+numpy — no external codec needed, unlike image/
-    video). Map-only Arrow-batched stage; per-row decode failures surface as
-    ``decode_ok=False`` rows, never aborts — the same error contract as the
-    reference's record split (tbdedup/mbox/mboxfile.py:187-344) and our
-    image path. Compressed formats (mp3/ogg/flac) would slot into the same
-    fn with a real codec lib; their absence here only narrows the accepted
-    container, not the plumbing.
-
-    Features (all C-backed numpy): duration, RMS and peak of the [-1,1]
-    normalized mono mix, zero-crossing rate, and the spectral centroid from
-    an rFFT over the first <=2^17 samples (deterministic cap so one 3-hour
-    row cannot own a task)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, raw in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    pcm, rate = codecs.decode_wav(bytes(raw))
-                    mono = pcm.astype(np.float64).mean(axis=1) / 32768.0
-                    n = mono.shape[0]
-                    dur = n / float(rate)
-                    rms = float(np.sqrt(np.mean(mono**2))) if n else 0.0
-                    peak = float(np.abs(mono).max()) if n else 0.0
-                    zcr = (
-                        float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-                        if n > 1 else 0.0
-                    )
-                    head = mono[: 1 << 17]
-                    mag = np.abs(np.fft.rfft(head))
-                    freqs = np.fft.rfftfreq(head.shape[0], d=1.0 / rate)
-                    tot = mag.sum()
-                    cent = float((freqs * mag).sum() / tot) if tot > 0 else 0.0
-                    out.append(
-                        (mid, rate, pcm.shape[1], dur, rms, peak, zcr, cent, True)
-                    )
-                except Exception:
-                    out.append((mid, None, None, None, None, None, None, None, False))
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FEATURES.fields])
-
-    return media.select(id_col, bytes_col).mapInPandas(fn, AUDIO_FEATURES)
 
 
 def sample_frames(media: DataFrame, every_k: int = 2,

@@ -282,16 +282,15 @@ def containment_pairs_sa(
     id_col: str = "image_id",
     text_col: str = "caption",
     k: int = 5,
-    bucket_col: str | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Suffix-array containment within buckets via applyInPandas.
 
-    ``bucket_col=None`` buckets by the min-shingle hash — short ⊆ long no
-    longer guarantees same min-shingle *bucket* unless the long doc is
-    indexed under every shingle, so for completeness this variant buckets by
-    probe semantics: each doc contributes its full row to every bucket keyed
-    by its bottom-1 hash AND long docs are replicated to candidate buckets.
+    Buckets by the min-shingle hash — short ⊆ long no longer guarantees
+    same min-shingle *bucket* unless the long doc is indexed under every
+    shingle, so for completeness this variant buckets by probe semantics:
+    each doc contributes its full row to every bucket keyed by its bottom-1
+    hash AND long docs are replicated to candidate buckets.
     For simplicity and exactness we replicate longs by all their shingle
     hashes that are some doc's bottom-1 (semi-join), keeping bucket contents
     small. Identical output to ``containment_pairs``.

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .. import codecs
+from ..functions import text
 
 
 def _psnr_fn(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -101,7 +102,7 @@ def check_members(
     reps = clusters.filter(F.col("is_representative")).select(
         F.col("cluster_id"), F.col("image_id").alias("_rep_id")
     )
-    toks = lambda c: F.array_distinct(F.split(F.trim(F.regexp_replace(F.lower(c), r"\s+", " ")), " "))
+    toks = lambda c: F.array_distinct(F.split(text.norm_text(c), " "))
     cheap = (
         members.join(reps, "cluster_id")
         .join(

@@ -12,12 +12,10 @@ exist by construction; the k-gram text dies at the projection before the
 exchange (only a packed int64 shuffles); the final distinct is the only
 corpus-wide shuffle and runs on three int columns.
 
-Hash split (the minhash.py md5-vs-crc32 convention): ``hash_fn=text.hash60``
-is the ORACLE-GRADE path (bit-identical in DuckDB — the driver contract's
-``winnowing_fingerprints`` uses it); ``hash_fn=text.hash32`` is the
-THROUGHPUT path (~100x cheaper per gram). Fingerprint VALUES differ across
-hash fns by design; the selection-density and coverage guarantees are hash-
-independent, which tests/test_round5d.py pins for both.
+Hash: the md5 ``text.hash60``, bit-identical in DuckDB (the driver
+contract's ``winnowing_fingerprints`` and ``winnow_dup_pairs`` restate it).
+The selection-density and coverage guarantees do not depend on the hash;
+tests/test_round5d.py pins them.
 
 Reference analog: the canonical-signature stage (SURVEY §2 O4,
 /root/reference/tbdedup/dedup/__init__.py hashing) refined from whole-
@@ -41,7 +39,6 @@ def winnow_fingerprints(
     text_col: str = "norm",
     k: int = 7,
     w: int = 4,
-    hash_fn=None,
 ) -> DataFrame:
     """(id, pos, fp) winnowing fingerprints of ``text_col``.
 
@@ -53,7 +50,6 @@ def winnow_fingerprints(
     """
     if k < 1 or w < 1:
         raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-    hash_fn = text.hash60 if hash_fn is None else hash_fn
     # docs shorter than k yield no grams; the filter must come BEFORE the
     # explode — sequence(0, negative) is DESCENDING in Spark and substr
     # with a negative start counts from the string end (garbage grams).
@@ -69,7 +65,7 @@ def winnow_fingerprints(
         ).alias("pos", "gm"),
     )
     key: Column = (
-        (hash_fn("gm") % F.lit(1 << 30)) * F.lit(POS_ENC)
+        (text.hash60("gm") % F.lit(1 << 30)) * F.lit(POS_ENC)
         + (F.lit(POS_ENC - 1) - F.col("pos"))
     ).alias("key")
     win = F.min("key").over(

@@ -11,11 +11,11 @@ row-group boundaries), so the whole CPU-bound stage runs on a single core —
 measured 9.0s for the minhash signature build at sf0.1 (1 task) vs ~1s at
 32-way parallelism (BENCH/dissect_r06.py, round 6).
 
-``fan_out_small_scan`` is the adaptive form of the fix ``operators/cdc.py``
-already shipped as a manual ``min_partitions`` knob: repartition up to the
-session's default parallelism ONLY when the physical plan would yield fewer
-partitions. At real corpus scale the scan has thousands of splits and this
-is a structural no-op — the guard is what keeps the fix from turning into a
+``fan_out_small_scan`` repartitions up to the session's default
+parallelism ONLY when the physical plan would yield fewer partitions; the
+heavy text map stages under ``operators/`` call it on their narrow input.
+At real corpus scale the scan has thousands of splits and this is a
+structural no-op — the guard is what keeps the fix from turning into a
 full-corpus shuffle at 100 TB (guide §2.4: remove shuffles outright; §6:
 input split sizing). The keyless round-robin repartition is retry-safe:
 ``spark.sql.execution.sortBeforeRepartition`` (default on) pins the

@@ -29,13 +29,23 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import text
 from ..operators import exact, minhash, simhash, substr, unionfind, verify
 from ..sources.catalog import Catalog, config_run_id
 from .partitioning import dropped_groups, dropped_rows
 
 # the detector names pairs_all's rows carry, one per detector stage
 DETECTORS = ("exact", "minhash", "simhash", "substr")
+
+# Containment-index constants (operators/substr.py), INTERNAL to the
+# detector: its output is identical for any value (docs shorter than the
+# machinery's reach take the brute broadcast path). Longer shingles are
+# rarer, and rare probes are the whole game — measured on the 75k-row bench
+# corpus at 4 cores: k=5 36.6s, k=12+sample_mod=4 10.8s, identical 12,278
+# pairs. SUBSTR_SAMPLE_MOD keeps only h%m==0 fingerprints (exact,
+# containment-closed, ~m x smaller index); positional winnowing measured
+# +40s here for the same shrink.
+SUBSTR_INDEX_K = 12
+SUBSTR_SAMPLE_MOD = 8
 
 
 @dataclass(frozen=True)
@@ -61,6 +71,10 @@ class DedupConfig:
     # So did removing minhash_salt_cap (salting is now the one rule of
     # partitioning.bucket_self_join) and raising minhash_max_bucket from 64
     # to 1024 (the same pair set: buckets up to 1024 were salted before).
+    # So did moving substr_index_k and substr_sample_mod to the module
+    # constants SUBSTR_INDEX_K and SUBSTR_SAMPLE_MOD (output identical for
+    # any value); a --config JSON that names either field now fails with
+    # TypeError (an unexpected keyword of DedupConfig).
     dataset_id: str = ""
     shingle_k: int = 5
     n_perm: int = 16
@@ -72,24 +86,15 @@ class DedupConfig:
     # estimated-Jaccard prefilter before the exact verify join (fraction of
     # equal minhash coords); ~tau/2 = 3+ sigma below tau at n_perm=16, so
     # true pairs pass w.p. ~1-1e-5 while collision junk (J ~ 0.05) dies.
-    # CONTRACT NOTE: est_tau (with the crc32 hash + int32 hash-set carry
-    # below) makes the pipeline's minhash detector probabilistic-recall,
-    # unlike the oracle-exact query path (md5 hash60, a prefilter DuckDB
-    # restates): a true pair drops w.p. ~1e-5 and crc32 collisions can
-    # perturb scores near tau. Verified identical on the bench corpus;
-    # minhash_est_tau=None removes the prefilter's share of that loss.
+    # CONTRACT NOTE: est_tau (with the throughput grade the detector runs,
+    # carry="hashes32": crc32 hashes, int32 sets) makes the pipeline's
+    # minhash detector probabilistic-recall, unlike the oracle grade of the
+    # driver queries (md5 hash60, a prefilter DuckDB restates): a true pair
+    # drops w.p. ~1e-5 and crc32 collisions can perturb scores near tau.
+    # Verified identical on the bench corpus; minhash_est_tau=None removes
+    # the prefilter's share of that loss.
     minhash_est_tau: float | None = 0.3
     simhash_max_bucket: int = 1024
-    # Containment-index knobs (operators/substr.py). The index shingle width
-    # is INTERNAL to the detector (output identical for any k; docs shorter
-    # than the machinery's reach take the brute broadcast path): longer
-    # shingles are rarer, and rare probes are the whole game — measured on
-    # the 75k-row bench corpus at 4 cores: k=5 36.6s, k=12+sample_mod=4
-    # 10.8s, identical 12,278 pairs. sample_mod keeps only h%m==0
-    # fingerprints (exact, containment-closed, ~m x smaller index);
-    # positional winnowing measured +40s here for the same shrink.
-    substr_index_k: int = 12
-    substr_sample_mod: int = 8
     min_psnr_db: float = 40.0
     seed: int = 42
 
@@ -161,10 +166,9 @@ def run_pipeline(
             k=config.shingle_k, n_perm=config.n_perm, n_bands=config.n_bands,
             tau=config.jaccard_tau, seed=config.seed,
             max_bucket=config.minhash_max_bucket,
-            hash_fn=text.hash32,  # throughput-grade; oracle queries pass md5
             est_tau=config.minhash_est_tau,
-            # int sets, not strings/longs: the fat shuffle column, and the
-            # bijective int32 fold keeps verify Jaccard exactly equal
+            # the throughput grade (crc32, int sets, xxhash64 band keys);
+            # the driver queries run the md5 oracle grade
             carry="hashes32",
         )
         _log_dropped("pairs_minhash", dropped)
@@ -182,7 +186,7 @@ def run_pipeline(
     def _sub():
         return substr.containment_pairs(
             sigs_ok, "image_id", "caption",
-            k=config.substr_index_k, sample_mod=config.substr_sample_mod,
+            k=SUBSTR_INDEX_K, sample_mod=SUBSTR_SAMPLE_MOD,
         )
 
     # The four detectors are independent consumers of the signatures table —

@@ -5,6 +5,8 @@ CORRECTNESS_r{N}.json green before the driver ever runs."""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
 import os
 import subprocess
@@ -75,6 +77,18 @@ def test_every_query_has_an_oracle():
     stages land their outputs as parquet for DuckDB). Lock that in: a new
     queries() entry without an oracle_sql() mirror is a regression."""
     assert set(entry_mod.oracle_sql()) == set(entry_mod.queries())
+
+
+def test_oracle_sql_and_query_order_pinned():
+    """The oracle SQL and the queries() order are fixed: a refactor of the
+    query builders must leave both byte-identical. The SQL embeds the
+    per-checkout ``_ORACLE_NS``, replaced here so the md5 does not depend
+    on the checkout path."""
+    sql = json.dumps(entry_mod.oracle_sql(), sort_keys=True)
+    sql = sql.replace(entry_mod._ORACLE_NS, "NS")
+    assert hashlib.md5(sql.encode()).hexdigest() == "5da2441ecd2ae8c92157120e968a643a"
+    order = "\n".join(entry_mod.queries())
+    assert hashlib.md5(order.encode()).hexdigest() == "18aa381124c4b31ddef2d77f3968ae10"
 
 
 def test_query_index_is_in_sync(tmp_path):

@@ -8,32 +8,6 @@ from tbdedup_spark import codecs
 from tbdedup_spark.operators import multimodal
 
 
-def test_image_features(spark, images, corpus_rows):
-    feats = multimodal.image_features(images.limit(30))
-    rows = {r.image_id: r for r in feats.collect()}
-    assert all(r.decode_ok for r in rows.values())
-    by_id = {r.image_id: r for r in corpus_rows}
-    for iid, r in list(rows.items())[:10]:
-        # recomputed phash must equal the stored column (integrity check)
-        assert r.phash == by_id[iid].phash
-        assert r.w == by_id[iid].w and r.h == by_id[iid].h
-        assert 0.0 <= r.mean_r <= 255.0 and r.entropy_bits > 0
-
-
-def test_image_features_bad_bytes(spark):
-    df = spark.createDataFrame([("x", b"garbage")], "image_id string, bytes binary")
-    row = multimodal.image_features(df).collect()[0]
-    assert row.decode_ok is False and row.phash is None
-
-
-def test_resize(spark, images):
-    out = multimodal.resize_images(images.limit(5), 32, 32).collect()
-    for r in out:
-        px = codecs.decode_image(bytes(r["bytes"]))
-        assert px.shape == (32, 32, 3)
-        assert (r.w, r.h) == (32, 32)
-
-
 def test_frame_sample_flatmap(spark):
     rng = np.random.default_rng(0)
     frames = [rng.integers(0, 256, (16, 24, 3), dtype=np.uint8) for _ in range(7)]
@@ -43,43 +17,6 @@ def test_frame_sample_flatmap(spark):
     assert [r.frame_idx for r in sorted(out, key=lambda r: r.frame_idx)] == [0, 2, 4, 6]
     f0 = codecs.decode_image(bytes(out[0]["frame_png"]))
     assert f0.shape == (16, 24, 3)
-
-
-def test_audio_features_real_wav(spark):
-    """End-to-end audio: PCM16 WAV rows decode to real features; garbage
-    bytes become decode_ok=False rows (error rows, not aborts)."""
-    rate = 8000
-    t = np.arange(rate * 2) / rate  # 2 s
-    tone = (0.5 * np.sin(2 * np.pi * 440.0 * t)).astype(np.float64)
-    silence = np.zeros(rate // 2)
-    rows = [
-        ("tone", codecs.encode_wav(tone, rate)),
-        ("silence", codecs.encode_wav(silence, rate)),
-        ("stereo", codecs.encode_wav(np.stack([tone, -tone], axis=1), rate)),
-        ("bad", b"\x00\x01not-audio"),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, bytes binary")
-    out = multimodal.audio_features(df)
-    assert out.schema == multimodal.AUDIO_FEATURES
-    by_id = {r.media_id: r for r in out.collect()}
-
-    r = by_id["tone"]
-    assert r.decode_ok and r.sample_rate == rate and r.channels == 1
-    assert abs(r.duration_s - 2.0) < 1e-9
-    assert abs(r.rms - 0.5 / np.sqrt(2)) < 1e-3  # sine RMS = A/sqrt(2)
-    assert abs(r.peak - 0.5) < 1e-3
-    assert abs(r.spectral_centroid_hz - 440.0) < 15.0  # energy at the tone
-    assert abs(r.zcr - 2 * 440.0 / rate) < 0.01  # 2 crossings per cycle
-
-    s = by_id["silence"]
-    assert s.decode_ok and s.rms == 0.0 and s.spectral_centroid_hz == 0.0
-
-    st = by_id["stereo"]
-    # opposite-phase channels cancel in the mono mix
-    assert st.channels == 2 and st.rms < 1e-6
-
-    bad = by_id["bad"]
-    assert bad.decode_ok is False and bad.duration_s is None
 
 
 def test_frame_near_dups_cross_video(spark):

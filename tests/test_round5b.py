@@ -8,7 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tbdedup_spark.functions import text
 from tbdedup_spark.operators import ann, incremental, minhash
 
 
@@ -113,9 +112,7 @@ def test_tiered_dedup_rejects_mismatched_history_sigs(spark):
     narrow = minhash.minhash_signatures(hist_df, "doc_id", "text", n_perm=8)
     with pytest.raises(ValueError, match="mh8"):
         incremental.tiered_dedup(new_df, hist_df, tau=0.6, hist_mh_sigs=narrow)
-    int_sets = minhash.minhash_signatures(
-        hist_df, "doc_id", "text", hash_fn=text.hash32, carry="hashes32"
-    )
+    int_sets = minhash.minhash_signatures(hist_df, "doc_id", "text", carry="hashes32")
     with pytest.raises(ValueError, match="array<bigint>"):
         incremental.tiered_dedup(new_df, hist_df, tau=0.6, hist_mh_sigs=int_sets)
 

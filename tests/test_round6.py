@@ -45,30 +45,26 @@ def test_fan_out_is_noop_on_wide_input(spark):
 
 
 def test_band_keys_raw_carry_matches_signature_columns(spark):
-    """fold_mh=False carries the RAW 61-bit coords (bit-exact est algebra);
-    fold_mh=True carries the int32 fold. Both agree with the signature
+    """band_keys takes its form from the grade of the signatures. Oracle
+    grade ("hashes"): string band keys and the RAW 61-bit coords (bit-exact
+    est algebra). Throughput grade ("hashes32"): xxhash64 long band keys
+    and the coords folded mod 2^31-1. Both agree with the signature
     columns they derive from."""
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
          (2, "the quick brown fox jumps over the lazy cat")],
         "doc_id long, text string",
     )
-    sigs = minhash.minhash_signatures(df, "doc_id", "text", 5, 16, 42).collect()
-    by_id = {r["_id"]: [r[f"mh{j}"] for j in range(16)] for r in sigs}
-
-    raw = minhash.band_keys(
-        minhash.minhash_signatures(df, "doc_id", "text", 5, 16, 42),
-        16, 8, carry_mh=True, fold_mh=False,
-    ).collect()
-    for r in raw:
-        assert list(r["_mh"]) == by_id[r["_id"]]
-
-    folded = minhash.band_keys(
-        minhash.minhash_signatures(df, "doc_id", "text", 5, 16, 42),
-        16, 8, carry_mh=True, fold_mh=True,
-    ).collect()
-    for r in folded:
-        assert list(r["_mh"]) == [v % 2147483647 for v in by_id[r["_id"]]]
+    for carry, key_type, fold in (("hashes", "string", lambda v: v),
+                                  ("hashes32", "bigint", lambda v: v % 2147483647)):
+        sigs = minhash.minhash_signatures(df, "doc_id", "text", 5, 16, 42, carry=carry)
+        by_id = {r["_id"]: [r[f"mh{j}"] for j in range(16)] for r in sigs.collect()}
+        banded = minhash.band_keys(sigs, 16, 8, carry_mh=True)
+        assert banded.schema["band_key"].dataType.simpleString() == key_type, carry
+        rows = banded.collect()
+        assert len(rows) == 2 * 8
+        for r in rows:
+            assert list(r["_mh"]) == [fold(v) for v in by_id[r["_id"]]], carry
 
 
 def test_ppjoin_prunes_exact_vs_bruteforce(spark):
