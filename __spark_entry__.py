@@ -640,7 +640,7 @@ def _q_snapshot_diff_dedup(spark, sf_dir):
     against any historical snapshot. The query commits snapshot 1 (docs
     with doc_id % INC_NEW_MOD != 0 — the tiered queries' history split)
     and snapshot 2 (the full corpus) of a (doc_id, sig) table through
-    Catalog(versioned=True), then anti-joins current against the
+    the Catalog, then anti-joins current against the
     TIME-TRAVEL READ of snapshot 1 by canonical signature: the rows whose
     content entered the corpus in commit 2. Exact-dup re-ingests (same
     sig, new doc_id) are correctly absent.
@@ -656,7 +656,7 @@ def _q_snapshot_diff_dedup(spark, sf_dir):
     from tbdedup_spark.sources.catalog import Catalog
 
     shutil.rmtree(SNAP_ORACLE_DIR, ignore_errors=True)  # deterministic re-runs
-    cat = Catalog(spark, SNAP_ORACLE_DIR, "run_snap", versioned=True)
+    cat = Catalog(spark, SNAP_ORACLE_DIR, "run_snap")
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.sha2(text.norm_text("text"), 256).alias("sig")
     )

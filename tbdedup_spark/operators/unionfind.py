@@ -41,7 +41,7 @@ measurements). Local checkpoints also live on
 executor-local storage — one lost executor at hour 3 of a 100-TB run kills
 the job unrecoverably. When a ``catalog`` is passed, every ``CKPT_EVERY``
 rounds the label relation is ALSO committed through the Catalog (reliable
-storage, atomic _SUCCESS/Iceberg-snapshot semantics) and re-read, and a
+storage, atomic parquet or Iceberg snapshot commits) and re-read, and a
 fresh ``connected_components`` call on the same edges RESUMES from the
 latest committed round: labels are monotone, so re-running a
 partially-complete round is harmless (SURVEY §4/§7's "checkpoint every k

@@ -9,7 +9,7 @@ corpus packed into one parquet row group yields ONE input split no matter
 what ``spark.sql.files.maxPartitionBytes`` says (parquet only splits at
 row-group boundaries), so the whole CPU-bound stage runs on a single core —
 measured 9.0s for the minhash signature build at sf0.1 (1 task) vs ~1s at
-32-way parallelism (BENCH/dissect_r06.py, round 6).
+32-way parallelism (OPTIMIZATION_r06.md, round 6).
 
 ``fan_out_small_scan`` repartitions up to the session's default
 parallelism ONLY when the physical plan would yield fewer partitions; the

@@ -75,6 +75,10 @@ class DedupConfig:
     # constants SUBSTR_INDEX_K and SUBSTR_SAMPLE_MOD (output identical for
     # any value); a --config JSON that names either field now fails with
     # TypeError (an unexpected keyword of DedupConfig).
+    # Stage tables committed as _SUCCESS directories, before every Catalog
+    # table became a parquet snapshot table, have no manifest: they do not
+    # resume, and their first write removes them, so those warehouses
+    # recompute too (the run id is unchanged).
     dataset_id: str = ""
     shingle_k: int = 5
     n_perm: int = 16

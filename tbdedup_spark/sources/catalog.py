@@ -1,12 +1,12 @@
 """Run catalog: checkpointed stage tables + lineage + metrics, resumable.
 
-Design target is an Iceberg catalog (`df.writeTo(...)`, hidden partitioning,
-snapshot-isolated commits); the ``iceberg=True`` branch implements exactly
-that (writeTo/createOrReplace commits, spark.table reads, tableExists resume
-probes) and is exercised by tests whenever the runtime jar is present. This
-sandbox ships no Iceberg jar, so the default branch implements the same
-contract over parquet directories with atomic _SUCCESS commits; callers
-never branch.
+Two modes, one contract; callers never branch. ``iceberg=True`` routes
+every table through an Iceberg catalog (writeTo/createOrReplace snapshot
+commits, spark.table reads, tableExists resume probes) and is exercised by
+tests whenever the runtime jar is present. The default mode is parquet
+snapshots: Iceberg's commit mechanic on plain parquet directories (data in
+``snap-<id>/``, one atomically swapped manifest), so atomic commits, resume
+probes, time travel and rollback are working code without the jar.
 
 This generalizes the reference's JSON plan documents — ``mapping.json``
 (tbdedup/planner/plan.py:46-80), per-group ``plan_output.json``
@@ -32,7 +32,6 @@ import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import schema
 
@@ -52,13 +51,18 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+# Seconds between a running stage's progress metric rows.
+PROGRESS_INTERVAL_S = 5.0
+
+
 class Catalog:
     """``iceberg=True`` routes every table through a real Iceberg catalog
     (``writeTo(...).createOrReplace()`` snapshot commits, ``spark.table``
     reads, ``tableExists`` resume probes) — the north_rule's checkpoint
-    store. The sandbox ships no Iceberg runtime jar, so the default is the
-    parquet-directory implementation with atomic _SUCCESS commits; both
-    modes satisfy the same contract and the pipeline code never branches.
+    store. Without the Iceberg runtime jar the default is parquet
+    snapshots: every write commits a new ``snap-<id>/`` directory through
+    an atomic manifest swap. Both modes satisfy the same contract, time
+    travel included, and the pipeline code never branches.
 
     ``iceberg_catalog`` is the Spark catalog name (configure e.g.
     ``spark.sql.catalog.ice = org.apache.iceberg.spark.SparkCatalog`` +
@@ -73,18 +77,15 @@ class Catalog:
         iceberg: bool = False,
         iceberg_catalog: str = "ice",
         namespace: str = "tbdedup",
-        progress_interval: float = 5.0,
-        versioned: bool = False,
     ):
         self.spark = spark
         self.warehouse = warehouse
         self.run_id = run_id
         self.iceberg = iceberg
-        self.versioned = versioned and not iceberg  # Iceberg versions natively
-        self.progress_interval = progress_interval
         self._ns = f"{iceberg_catalog}.{namespace}"
-        # schemas of the parquet tables this Catalog committed: read() passes
-        # them, so reading its own commits runs no schema-inference job
+        # schemas of the parquet snapshots this Catalog committed, keyed by
+        # (table, snapshot id): read() passes them, so reading its own
+        # commits runs no schema-inference job
         self._schemas: dict = {}
         if iceberg:
             if not iceberg_available(spark):
@@ -111,14 +112,15 @@ class Catalog:
     def _tbl(self, table: str) -> str:
         return f"{self._ns}.{self.run_id}_{table}"
 
+    def _snap_dir(self, table: str, snapshot_id: int) -> str:
+        return os.path.join(self._path(table), f"snap-{snapshot_id}")
+
     def exists(self, table: str) -> bool:
         if self.iceberg:
             return self.spark.catalog.tableExists(self._tbl(table))
-        if self.versioned:
-            return os.path.exists(self._manifest_path(table))
-        return os.path.exists(os.path.join(self._path(table), "_SUCCESS"))
+        return os.path.exists(self._manifest_path(table))
 
-    # --- versioned (snapshot / time-travel) parquet mode -------------------
+    # --- parquet snapshots ------------------------------------------------
     #
     # The Iceberg commit mechanic — write data files, then atomically swap a
     # single metadata pointer — implemented on plain parquet so the snapshot
@@ -144,8 +146,7 @@ class Catalog:
         os.replace(tmp, self._manifest_path(table))  # THE commit point
 
     def snapshots(self, table: str) -> list[dict]:
-        """Committed snapshots (id, rows), oldest first; requires
-        ``versioned=True``."""
+        """Committed snapshots (id, rows), oldest first (parquet mode)."""
         return self._manifest(table)["snapshots"]
 
     def current_snapshot(self, table: str) -> int:
@@ -181,8 +182,7 @@ class Catalog:
         m["snapshots"] = [s for s in m["snapshots"] if s["id"] in keep]
         self._commit_manifest(table, m)
         for sid in expired:
-            shutil.rmtree(os.path.join(self._path(table), f"snap-{sid}"),
-                          ignore_errors=True)
+            shutil.rmtree(self._snap_dir(table, sid), ignore_errors=True)
         return expired
 
     def list_tables(self, prefix: str = "") -> list[str]:
@@ -200,84 +200,65 @@ class Catalog:
         run_dir = os.path.join(self.warehouse, self.run_id)
         if not os.path.isdir(run_dir):
             return []
-        marker = "_snapshots.json" if self.versioned else "_SUCCESS"
         return sorted(
             t for t in os.listdir(run_dir)
             if t.startswith(prefix)
-            and os.path.exists(os.path.join(run_dir, t, marker))
+            and os.path.exists(os.path.join(run_dir, t, "_snapshots.json"))
         )
 
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
+        """The current snapshot of ``table``, or the committed snapshot
+        ``snapshot_id`` (time travel)."""
         if self.iceberg:
-            return self.spark.table(self._tbl(table))
-        if self.versioned:
-            m = self._manifest(table)
-            sid = m["current"] if snapshot_id is None else snapshot_id
-            if snapshot_id is not None and not any(
-                s["id"] == sid for s in m["snapshots"]
-            ):
-                # same contract as rollback(): only COMMITTED snapshots are
-                # addressable — an expired id (or a crash-window orphan dir)
-                # is a clean ValueError, not a parquet read of dead data
-                raise ValueError(f"unknown snapshot {sid} for {table}")
-            return self.spark.read.parquet(
-                os.path.join(self._path(table), f"snap-{sid}")
-            )
-        if snapshot_id is not None:
-            raise ValueError("snapshot reads need versioned=True (or Iceberg)")
-        known = self._schemas.get(table)
+            reader = self.spark.read
+            if snapshot_id is not None:
+                reader = reader.option("snapshot-id", snapshot_id)
+            return reader.table(self._tbl(table))
+        m = self._manifest(table)
+        sid = m["current"] if snapshot_id is None else snapshot_id
+        if snapshot_id is not None and not any(
+            s["id"] == sid for s in m["snapshots"]
+        ):
+            # same contract as rollback(): only COMMITTED snapshots are
+            # addressable — an expired id (or a crash-window orphan dir)
+            # is a clean ValueError, not a parquet read of dead data
+            raise ValueError(f"unknown snapshot {sid} for {table}")
+        known = self._schemas.get((table, sid))
         reader = self.spark.read if known is None else self.spark.read.schema(known)
-        return reader.parquet(self._path(table))
+        return reader.parquet(self._snap_dir(table, sid))
 
-    def write(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> int:
-        """Commit a stage output; returns row count. In parquet mode the
-        _SUCCESS marker plays the Iceberg snapshot-commit role (readers only
-        see completed writes); a partial write from a killed run is
-        overwritten on retry. In Iceberg mode createOrReplace IS the atomic
-        snapshot commit."""
+    def write(self, df: DataFrame, table: str) -> int:
+        """Commit ``df`` as the table's next snapshot; returns its row
+        count. In parquet mode the manifest swap is the commit (readers only
+        see completed writes), and a retry overwrites what a killed run left
+        under the snapshot id it re-earns. A table without a manifest — a
+        killed first write, or a table from before parquet snapshots — is
+        removed whole before ``snap-1/`` is written. In Iceberg mode
+        createOrReplace IS the atomic snapshot commit."""
         if self.iceberg:
-            writer = df.writeTo(self._tbl(table)).using("iceberg")
-            if partition_by:
-                from pyspark.sql import functions as _F
-
-                writer = writer.partitionedBy(*[_F.col(c) for c in partition_by])
-            writer.createOrReplace()
+            df.writeTo(self._tbl(table)).using("iceberg").createOrReplace()
             return self.read(table).count()
         path = self._path(table)
-        if self.versioned:
-            if self.exists(table):
-                m = self._manifest(table)
-            else:
-                os.makedirs(path, exist_ok=True)
-                m = {"current": 0, "next": 1, "snapshots": []}
-            sid = m["next"]
-            snap_dir = os.path.join(path, f"snap-{sid}")
-            shutil.rmtree(snap_dir, ignore_errors=True)  # killed-run leftovers
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(snap_dir)
-            n = self._footer_count(snap_dir)
-            if n is None:
-                n = self.spark.read.parquet(snap_dir).count()
-            m["snapshots"].append({"id": sid, "rows": n})
-            m["current"], m["next"] = sid, sid + 1
-            self._commit_manifest(table, m)  # readers flip here, atomically
-            return n
-        if os.path.exists(path) and not self.exists(table):
-            shutil.rmtree(path)  # partial output from a killed run
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        if not partition_by:  # partition columns come back re-typed and last
-            self._schemas[table] = df.schema
-        n = self._footer_count(path)
+        if self.exists(table):
+            m = self._manifest(table)
+        else:
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            m = {"current": 0, "next": 1, "snapshots": []}
+        sid = m["next"]
+        snap_dir = self._snap_dir(table, sid)
+        shutil.rmtree(snap_dir, ignore_errors=True)  # killed-run leftovers
+        df.write.mode("overwrite").parquet(snap_dir)
+        self._schemas[(table, sid)] = df.schema
+        n = self._footer_count(snap_dir)
         if n is None:
             # warehouse not driver-local POSIX (object store / DFS paths):
             # os.walk sees nothing — count through Spark rather than
             # silently recording row_count=0 in lineage/metrics
-            n = self.spark.read.parquet(path).count()
+            n = self.spark.read.parquet(snap_dir).count()
+        m["snapshots"].append({"id": sid, "rows": n})
+        m["current"], m["next"] = sid, sid + 1
+        self._commit_manifest(table, m)  # readers flip here, atomically
         return n
 
     @staticmethod
@@ -407,7 +388,7 @@ class Catalog:
 
     # --- stage protocol ---------------------------------------------------
 
-    def stage(self, name: str, build, input_ref: str = "", partition_by: list[str] | None = None) -> DataFrame:
+    def stage(self, name: str, build, input_ref: str = "") -> DataFrame:
         """Run-or-resume one stage: if the output table exists for this
         run_id, skip the build (the reference's analog: combinatory skips
         nothing and recomputes everything — resume is our addition, enabled
@@ -428,46 +409,44 @@ class Catalog:
         try:
             sc.setJobGroup(group, f"stage {name}")
             df = build()
-            n = self.write(df, name, partition_by)
+            n = self.write(df, name)
         finally:
             sc.setJobGroup(None, None)
             stop()
         # lineage points at where the data actually lives: the catalog table
-        # in Iceberg mode, the filesystem path otherwise (review catch)
-        out_ref = self._tbl(name) if self.iceberg else self._path(name)
+        # in Iceberg mode, the committed snapshot directory otherwise
+        out_ref = (
+            self._tbl(name) if self.iceberg
+            else self._snap_dir(name, self.current_snapshot(name))
+        )
         self.log_lineage(name, input_ref, out_ref, n, "OK")
         self.log_metric(name, "wall_clock_s", time.time() - t0)
         self.log_metric(name, "row_count", n)
         return self.read(name)
 
-    def _start_progress(self, stage_name: str, job_group: str | None = None):
+    def _start_progress(self, stage_name: str, job_group: str):
         """Within-stage progress rows — the O15 analog of the reference's
         per-file %-progress callback (tbdedup/dedup/__init__.py:94-107): a
-        driver thread samples the status tracker every ``progress_interval``
-        seconds and appends (tasks done, tasks total) metrics rows MID-RUN,
-        so a long stage is observable from the metrics table while it runs.
-        ``job_group`` restricts the sample to jobs this stage submitted —
-        the concurrent detector stages otherwise cross-attribute each
-        other's tasks. Returns a stop() callable."""
-        if not self.progress_interval or self.progress_interval <= 0:
-            return lambda: None
+        driver thread samples the status tracker every
+        ``PROGRESS_INTERVAL_S`` seconds and appends (tasks done, tasks
+        total) metrics rows MID-RUN, so a long stage is observable from the
+        metrics table while it runs. The sample covers only ``job_group``,
+        the jobs this stage submitted — the concurrent detector stages
+        otherwise cross-attribute each other's tasks. Returns a stop()
+        callable."""
         ev = threading.Event()
 
         def _poll():
             st = self.spark.sparkContext.statusTracker()
-            while not ev.wait(self.progress_interval):
+            while not ev.wait(PROGRESS_INTERVAL_S):
                 try:
                     done = total = 0
-                    if job_group is not None:
-                        sids = set()
-                        for jid in st.getJobIdsForGroup(job_group):
-                            jinfo = st.getJobInfo(jid)
-                            if jinfo:
-                                sids.update(jinfo.stageIds)
-                        infos = [st.getStageInfo(s) for s in sids]
-                    else:
-                        infos = [st.getStageInfo(s) for s in st.getActiveStageIds()]
-                    for info in infos:
+                    sids = set()
+                    for jid in st.getJobIdsForGroup(job_group):
+                        jinfo = st.getJobInfo(jid)
+                        if jinfo:
+                            sids.update(jinfo.stageIds)
+                    for info in map(st.getStageInfo, sids):
                         if info:
                             done += info.numCompletedTasks
                             total += info.numTasks

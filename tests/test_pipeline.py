@@ -122,6 +122,47 @@ def test_pipeline_resume_identical(spark, images, pipeline_out, golden):
     assert a == b
 
 
+def test_pipeline_resumes_after_a_crash_in_a_commit(
+    spark, images, pipeline_out, tmp_path, monkeypatch
+):
+    """A run killed inside the clusters commit — its data written to
+    snap-1/, the manifest never swapped — resumes on the same warehouse:
+    the committed stages are read back, not rebuilt, and the orphan snap-1/
+    is replaced by a clean commit of the same clusters."""
+    import os
+
+    from tbdedup_spark.sources.catalog import Catalog
+
+    commit, crashed = Catalog._commit_manifest, []
+
+    def crash_once(self, table, manifest):
+        if table == "clusters" and not crashed:
+            crashed.append(table)
+            raise RuntimeError("killed in the clusters commit")
+        return commit(self, table, manifest)
+
+    monkeypatch.setattr(Catalog, "_commit_manifest", crash_once)
+    wh = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="killed"):
+        run_pipeline(spark, images, wh)
+    cat = Catalog(spark, wh, config_run_id(asdict(DedupConfig())))
+    orphan = os.path.join(cat._path("clusters"), "snap-1")
+    assert os.path.isdir(orphan) and not cat.exists("clusters")
+    marker = os.path.join(orphan, "_orphan")  # readers skip _-prefixed files
+    open(marker, "w").close()
+
+    out = run_pipeline(spark, images, wh)
+    stages = [r.stage for r in out["lineage"].collect()]
+    assert sorted(stages) == sorted(set(stages)), "a committed stage was rebuilt"
+    assert {"signatures", "pairs_all", "clusters", "clusters_verified"} <= set(stages)
+    assert not os.path.exists(marker)
+    assert sorted(os.listdir(cat._path("clusters"))) == ["_snapshots.json", "snap-1"]
+    assert [s["id"] for s in cat.snapshots("clusters")] == [1]
+    _, clean_wh = pipeline_out
+    clean = Catalog(spark, clean_wh, cat.run_id).read("clusters")
+    assert sorted(clean.collect()) == sorted(cat.read("clusters").collect())
+
+
 def test_pipeline_determinism_fresh_warehouse(spark, images, pipeline_out, tmp_path):
     out1, _ = pipeline_out
     out2 = run_pipeline(spark, images, str(tmp_path / "wh2"))
@@ -230,5 +271,7 @@ def test_stage_reads_pass_the_inferred_schema(spark, images, tmp_path, monkeypat
     assert {"signatures", "pairs_minhash", "clusters"} <= committed
     assert {t for _, t, _ in reads} == committed
     for _, table, df in reads:
-        assert table in cat._schemas, f"{table} was read with inference"
-        assert df.schema == spark.read.parquet(cat._path(table)).schema, table
+        sid = cat.current_snapshot(table)
+        assert (table, sid) in cat._schemas, f"{table} was read with inference"
+        inferred = spark.read.parquet(cat._snap_dir(table, sid)).schema
+        assert df.schema == inferred, table

@@ -269,6 +269,13 @@ def test_catalog_iceberg_mode(spark, images, tmp_path):
     n = cat.write(df, "t1")
     assert n == 5 and cat.exists("t1")
     assert cat.read("t1").count() == 5
+    # time travel: a second commit, then a read of the first snapshot
+    assert cat.write(df.limit(2), "t1") == 2
+    first = spark.sql(
+        f"SELECT snapshot_id FROM {cat._tbl('t1')}.snapshots ORDER BY committed_at"
+    ).first()[0]
+    assert cat.read("t1").count() == 2
+    assert cat.read("t1", snapshot_id=first).count() == 5
     cat.log_metric("s", "k", 1.0)
     assert cat.metrics().count() >= 1
 

@@ -32,14 +32,23 @@ def test_list_tables_prefix_and_commit_gate(spark, tmp_path):
     cat.write(spark.range(3), "uf_labels_iter0004")
     cat.write(spark.range(3), "uf_labels_iter0008")
     cat.write(spark.range(3), "other_table")
-    # an uncommitted (no _SUCCESS) dir must not be listed
+    # an uncommitted dir (no _snapshots.json manifest) must not be listed
     partial = os.path.join(str(tmp_path / "wh"), "run_lt", "uf_labels_iter0012")
     os.makedirs(partial, exist_ok=True)
+    # nor a table in the older layout: _SUCCESS and part files, no manifest
+    legacy = os.path.join(str(tmp_path / "wh"), "run_lt", "uf_labels_iter0016")
+    spark.range(3).write.parquet(legacy)
+    assert os.path.exists(os.path.join(legacy, "_SUCCESS"))
+    assert not cat.exists("uf_labels_iter0016")
     assert cat.list_tables("uf_labels_iter") == [
         "uf_labels_iter0004",
         "uf_labels_iter0008",
     ]
     assert "other_table" in cat.list_tables()
+    # its first write replaces the old directory whole: no stale part files
+    assert cat.write(spark.range(5), "uf_labels_iter0016") == 5
+    assert sorted(os.listdir(legacy)) == ["_snapshots.json", "snap-1"]
+    assert cat.read("uf_labels_iter0016").count() == 5
 
 
 def test_footer_count_non_posix_signal(tmp_path):

@@ -304,7 +304,7 @@ def test_phash_catches_resized_reuploads():
         assert d <= 7, f"seed {seed}: resized copy Hamming {d} > near radius"
 
 
-# --- versioned (snapshot / time-travel) catalog mode ----------------------------
+# --- catalog parquet snapshots (time travel, rollback, expiry) -----------------
 
 
 def test_catalog_versioned_snapshots(spark, tmp_path):
@@ -314,7 +314,7 @@ def test_catalog_versioned_snapshots(spark, tmp_path):
     current snapshot."""
     from tbdedup_spark.sources.catalog import Catalog
 
-    cat = Catalog(spark, str(tmp_path), "run_v", versioned=True)
+    cat = Catalog(spark, str(tmp_path), "run_v")
     assert not cat.exists("t")
     assert cat.write(spark.range(3).selectExpr("id AS v"), "t") == 3
     assert cat.write(spark.range(5).selectExpr("id + 10 AS v"), "t") == 5
@@ -336,17 +336,6 @@ def test_catalog_versioned_snapshots(spark, tmp_path):
         cat.rollback("t", 99)
 
 
-def test_catalog_unversioned_rejects_snapshot_reads(spark, tmp_path):
-    from tbdedup_spark.sources.catalog import Catalog
-    import pytest as _pt
-
-    cat = Catalog(spark, str(tmp_path), "run_u")
-    cat.write(spark.range(2).selectExpr("id AS v"), "t")
-    assert cat.read("t").count() == 2
-    with _pt.raises(ValueError):
-        cat.read("t", snapshot_id=1)
-
-
 def test_catalog_versioned_killed_run_recovery(spark, tmp_path):
     """A run killed between the data write and the manifest commit leaves
     an orphan snap dir and an UNMOVED pointer: readers never saw the dead
@@ -356,7 +345,7 @@ def test_catalog_versioned_killed_run_recovery(spark, tmp_path):
 
     from tbdedup_spark.sources.catalog import Catalog
 
-    cat = Catalog(spark, str(tmp_path), "run_k", versioned=True)
+    cat = Catalog(spark, str(tmp_path), "run_k")
     cat.write(spark.range(3).selectExpr("id AS v"), "t")
     # simulate a kill: orphan snap-2 data, manifest still at snapshot 1
     orphan = os.path.join(str(tmp_path), "run_k", "t", "snap-2")
@@ -380,7 +369,7 @@ def test_catalog_expire_commits_manifest_before_deleting(spark, tmp_path, monkey
     from tbdedup_spark.sources import catalog as catmod
     from tbdedup_spark.sources.catalog import Catalog
 
-    cat = Catalog(spark, str(tmp_path), "run_x", versioned=True)
+    cat = Catalog(spark, str(tmp_path), "run_x")
     for i in (3, 5, 7):
         cat.write(spark.range(i).selectExpr("id AS v"), "t")
 
@@ -445,7 +434,7 @@ def test_catalog_expire_keep_last_zero_keeps_only_current(spark, tmp_path):
 
     from tbdedup_spark.sources.catalog import Catalog
 
-    cat = Catalog(spark, str(tmp_path), "run_z", versioned=True)
+    cat = Catalog(spark, str(tmp_path), "run_z")
     for i in (3, 5, 7):
         cat.write(spark.range(i).selectExpr("id AS v"), "t")
     assert cat.expire_snapshots("t", keep_last=0) == [1, 2]
