@@ -77,6 +77,10 @@ def main() -> None:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.sql.files.maxPartitionBytes", "16m")
+        # same generated-class cache as session.get_spark (see its comment):
+        # at the default 100 every repeated pipeline pass recompiles its
+        # ~200 classes, and the scaling levels would measure Janino
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         .config("spark.executor.extraJavaOptions", netty)
         .config("spark.driver.extraJavaOptions", netty)
         .config("spark.python.worker.reuse", "true")

@@ -3,10 +3,19 @@ a small deterministic corpus, and its trusted oracle outputs."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tbdedup_spark import schema, synth
 from tbdedup_spark.session import get_spark
+
+# get_spark's 32g default lets G1 grow the heap to the host's RAM: over
+# test_pipeline + test_entry_oracle the heap committed 13.5 GB and the JVM
+# peaked at 14.3 GB RSS of a 16 GB host, while the most the old and
+# humongous regions held after any collection was 3.6 GB (2.7 GB after a
+# mixed one). 8g is 2.2x that peak and leaves the host room.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 
 @pytest.fixture(scope="session")
