@@ -2861,7 +2861,7 @@ def _substr_pairs_sql() -> str:
     Contract shared with the Spark side: empty normalized strings are
     excluded (an empty string is contained in everything — quadratic junk);
     sub-k-length docs are included (Spark handles them via the broadcast
-    brute path, operators/substr.py:_short_doc_pairs)."""
+    brute path, operators/substr.py:_brute_pairs)."""
     return f"""
 dn AS (SELECT doc_id, {_NORM} AS norm FROM documents),
 sub_pairs AS (

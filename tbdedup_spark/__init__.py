@@ -10,8 +10,9 @@ pairs:
   (reference: tbdedup/mbox/mboxmessage.py:94-117) and a *disk* hash over the
   raw on-disk bytes (tbdedup/mbox/mboxmessage.py:96-98);
 * three approximate candidate generators — caption-shingle MinHash with LSH
-  banding, phash SimHash Hamming bucketing, and suffix-array caption
-  containment;
+  banding, phash SimHash Hamming bucketing, and exact caption containment
+  (rarest-shingle probe against an inverted shingle index; README's
+  "Deviations from the north_rule" says why it is not a suffix array);
 * a distributed union-find (iterative smallest-id label propagation) that
   merges all detector edges into clusters with deterministic representatives
   (a strict refinement of the reference's "take the first entry" rule,

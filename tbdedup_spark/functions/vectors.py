@@ -25,10 +25,6 @@ def norm(a: str | Column) -> Column:
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine(a: str | Column, b: str | Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def lsh_signature(vec_col: str, projections: list[list[float]]) -> Column:
     """Random-hyperplane LSH: bit j = 1 iff dot(vec, proj_j) > 0, packed into
     a long. Projections are seeded constants baked into the plan as literals,

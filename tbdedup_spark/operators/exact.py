@@ -12,7 +12,9 @@ verify → write. Spark mapping:
 * O10 per-hash point lookups (a Python-driven nested-loop semi-join) →
   ONE ``groupBy`` shuffle — the single most important re-expression: the
   reference issues H point queries, we issue one hash-partitioned exchange;
-* O11 take-first → deterministic ``min(image_id)`` representative.
+* O11 take-first → deterministic ``min(image_id)`` representative (the star
+  centre of ``exact_pairs``; clusters take theirs in
+  ``unionfind.with_representatives``).
 
 Shuffle budget: exactly one exchange on the signature key. ``bytes`` never
 enters it (narrow projection first — late materialization, see
@@ -73,30 +75,6 @@ def exact_pairs(sigs: DataFrame) -> DataFrame:
             F.lit(1.0).alias("score"),
         )
     )
-
-
-def representatives(sigs: DataFrame, key: str = "sig") -> DataFrame:
-    """One deterministic representative per signature group.
-
-    The reference takes whatever row SQLite yields first and breaks
-    (tbdedup/dedup/__init__.py:156-157 — scan-order-nondeterministic); we
-    refine to min(image_id), which satisfies the same "any member" contract
-    reproducibly.
-
-    groupBy(min)+join rather than a row_number window — same skew argument
-    as ``exact_pairs``: hot groups must never serialize onto one task.
-
-    PRECONDITION: ``key`` must be non-null. A null key would group (null
-    groups) but never survive the equi-join back (null != null), silently
-    vanishing from the output (review catch). The schemas this operator
-    serves guarantee it: IMAGES.bytes is non-nullable (schema.py) and
-    signatures() emits DECODE_ERROR sentinels, never nulls, on bad rows.
-    """
-    reps = sigs.groupBy(key).agg(
-        F.min("image_id").alias("image_id"),
-        F.count(F.lit(1)).alias("group_size"),
-    )
-    return sigs.join(reps, [key, "image_id"])
 
 
 def dual_hash_sanity(sigs: DataFrame) -> DataFrame:

@@ -20,7 +20,7 @@ The result is row-identical to the single-window form PROVIDED the order is
 total (e.g. a unique id as the last sort key) — the same determinism
 requirement the single-window form already has.
 
-This generalizes the groupBy+join min-rep pattern of ``exact.representatives``
+This generalizes the groupBy+join min-rep pattern of ``exact.exact_pairs``
 (k = 1 there) to arbitrary k; the reference has no analog (its per-hash
 lookups are driver-side loops, tbdedup/dedup/__init__.py:140-157).
 """

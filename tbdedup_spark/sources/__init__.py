@@ -1,2 +1,1 @@
-"""Table sources & sinks: the run catalog (lineage/metrics/resume) and the
-image container readers."""
+"""Table sources & sinks: the run catalog (lineage/metrics/resume)."""

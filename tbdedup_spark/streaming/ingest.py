@@ -1,10 +1,11 @@
-"""Incremental signature ingest via Structured Streaming.
+"""Streaming first-seen exact dedup via Structured Streaming.
 
 The signature stage (operators/exact.signatures) is stateless per row, so it
 streams trivially: ``readStream`` over an arriving-files directory (stand-in
-for a Kafka/Iceberg CDC source), the same projection, append-mode sink.
+for a Kafka/Iceberg CDC source), the same projection, then one stateful
+operator that keeps the first row per canonical signature, append-mode sink.
 Candidate generation and clustering remain periodic batch jobs over the
-accumulated signatures table — the standard lambda split for dedup at scale
+accumulated table — the standard lambda split for dedup at scale
 (clustering is a global fixpoint; streaming it would need
 applyInPandasWithState and approximate merges, out of the north_rule scope).
 
@@ -20,79 +21,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import schema
 from ..operators import exact
-
-
-def stream_signatures(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    include_canonical: bool = True,
-    max_files_per_trigger: int = 16,
-) -> StreamingQuery:
-    """Start the incremental ingest: parquet files with IMAGES schema arriving
-    in ``input_dir`` → SIGNATURES rows appended under ``output_dir``."""
-    stream = (
-        spark.readStream.schema(schema.IMAGES)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("recursiveFileLookup", "true")
-        .parquet(input_dir)
-    )
-    sigs = exact.signatures(stream, include_canonical=include_canonical)
-    return (
-        sigs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
-
-
-def stream_signatures_from_containers(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    pattern: str = "*.imgc",
-    include_canonical: bool = True,
-    max_files_per_trigger: int = 16,
-) -> StreamingQuery:
-    """The raw first mile, streaming: container files arriving (recursively)
-    under ``input_dir`` → record split (sources/containers.py) → SIGNATURES
-    appended. Split errors are dropped here (the batch path surfaces them as
-    quarantine rows); the stage stays stateless so it streams trivially."""
-    from pyspark.sql import types as T
-
-    from ..sources import containers
-
-    binary_file_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType(), False),
-            T.StructField("modificationTime", T.TimestampType(), False),
-            T.StructField("length", T.LongType(), False),
-            T.StructField("content", T.BinaryType(), True),
-        ]
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_file_schema)
-        .option("pathGlobFilter", pattern)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(input_dir)
-    )
-    split = containers.split_records(files)
-    images = split.filter(split["error"].isNull()).select(
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
-    )
-    sigs = exact.signatures(images, include_canonical=include_canonical)
-    return (
-        sigs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
 
 
 def stream_dedup_first_seen(

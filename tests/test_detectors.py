@@ -56,12 +56,6 @@ def test_substr_containment_exact_vs_oracle(spark, images, golden):
     assert got == oracle
 
 
-def test_substr_suffix_array_matches_index_variant(spark, images):
-    a = {(r.a_id, r.b_id) for r in substr.containment_pairs(images).collect()}
-    b = {(r.a_id, r.b_id) for r in substr.containment_pairs_sa(images).collect()}
-    assert a == b
-
-
 def test_minhash_carry_hashes_equivalent(spark, images):
     """The verified pair set does not depend on the grade: the oracle grade
     (md5 hash60 long sets, the default) and the pipeline's throughput grade

@@ -2,8 +2,6 @@
 
 import hashlib
 
-from pyspark.sql import functions as F
-
 from tbdedup_spark import codecs, schema, synth
 from tbdedup_spark.operators import exact
 
@@ -48,18 +46,6 @@ def test_exact_pairs_match_oracle(spark, images, golden):
     got = {(r.a_id, r.b_id) for r in exact.exact_pairs(sigs).collect()}
     oracle = [(a, b) for a, b, d, _ in golden["pairs"] if d == "exact"]
     assert _partition(got) == _partition(oracle)
-
-
-def test_representative_is_group_min(spark, images):
-    sigs = exact.signatures(images)
-    reps = exact.representatives(sigs)
-    check = (
-        sigs.groupBy("sig")
-        .agg(F.min("image_id").alias("expect"))
-        .join(reps.select("sig", "image_id"), "sig")
-    )
-    assert check.filter(F.col("expect") != F.col("image_id")).count() == 0
-    assert reps.select("sig").distinct().count() == reps.count()
 
 
 def test_dual_hash_sanity_diverges_on_metadata_variant(spark, corpus_rows):

@@ -7,6 +7,7 @@ from dataclasses import asdict
 import pytest
 from pyspark.sql import functions as F
 
+from tbdedup_spark import schema
 from tbdedup_spark.operators import unionfind
 from tbdedup_spark.plans.pipeline import DedupConfig, run_pipeline
 from tbdedup_spark.sources.catalog import config_run_id
@@ -107,6 +108,25 @@ def test_pipeline_lineage_and_metrics(spark, pipeline_out):
             "pairs_substr", "pairs_all", "clusters", "clusters_verified"} <= stages
     keys = {r.key for r in out["metrics"].collect()}
     assert {"unique_canonical", "unique_disk", "wall_clock_s", "row_count"} <= keys
+
+
+def test_pipeline_outputs_match_declared_schemas(spark, pipeline_out):
+    """Every table run_pipeline returns has the fields schema.py declares,
+    by name and type. Nullability is not compared: parquet read-back makes
+    every field nullable."""
+    out, _ = pipeline_out
+    tables = {
+        "signatures": (out["signatures"], schema.SIGNATURES),
+        "pairs": (out["pairs"], schema.PAIRS),
+        "clusters": (out["clusters"], schema.CLUSTERS),
+        "lineage": (out["lineage"], schema.LINEAGE),
+        "metrics": (out["metrics"], schema.METRICS),
+        "quarantine": (out["quarantine"], schema.QUARANTINE),
+    }
+    for name, (df, declared) in tables.items():
+        got = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+        want = [(f.name, f.dataType.simpleString()) for f in declared.fields]
+        assert got == want, name
 
 
 def test_pipeline_resume_identical(spark, images, pipeline_out, golden):

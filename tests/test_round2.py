@@ -48,12 +48,6 @@ def test_containment_short_docs(spark, m):
     assert got == _brute_contain(SHORT_ROWS)
 
 
-def test_containment_sa_short_docs(spark):
-    df = _doc_df(spark, SHORT_ROWS)
-    got = {(r.a_id, r.b_id) for r in substr.containment_pairs_sa(df).collect()}
-    assert got == _brute_contain(SHORT_ROWS)
-
-
 def test_sampled_containment_exact_vs_brute_random(spark):
     """The mod-sampled index + rarest-fingerprint probe is COMPLETE (not
     probabilistic): on a random corpus with planted containments at adversarial

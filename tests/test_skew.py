@@ -8,7 +8,7 @@ import threading
 import pytest
 
 from tbdedup_spark.operators import (
-    editdist, minhash, multimodal, setsim, simhash, substr, winnow,
+    editdist, minhash, multimodal, setsim, simhash, winnow,
 )
 from tbdedup_spark.plans import partitioning
 from tbdedup_spark.plans.partitioning import cap_hot_keys, dropped_groups, dropped_rows
@@ -147,9 +147,6 @@ _CAP_SITES = {
     ),
     "simhash_pairs": lambda s, cap: simhash.simhash_pairs(
         s.createDataFrame([], "id long, sig long"), "id", "sig", max_bucket=cap
-    ),
-    "containment_pairs_sa": lambda s, cap: substr.containment_pairs_sa(
-        s.createDataFrame([], "id string, text string"), "id", "text", max_bucket=cap
     ),
     "jaccard_pairs": lambda s, cap: setsim.jaccard_pairs(
         s.createDataFrame([], "doc_id string, toks array<string>"), "doc_id", "toks", 0.5,

@@ -1,4 +1,4 @@
-"""Structured-Streaming ingest: files arriving → signature rows appended.
+"""Structured-Streaming ingest: files arriving → first-seen signature rows.
 Exercises the incremental analog of the reference's per-file asyncio fan-out
 (tbdedup/dedup/__init__.py:109-119)."""
 
@@ -7,7 +7,6 @@ import os
 import shutil
 
 from tbdedup_spark import schema, synth
-from tbdedup_spark.streaming.ingest import stream_signatures
 
 
 def _land(spark, rows, inp, tag):
@@ -18,29 +17,6 @@ def _land(spark, rows, inp, tag):
     for i, f in enumerate(glob.glob(tmp + "/part-*.parquet")):
         shutil.move(f, os.path.join(inp, f"{tag}_{i}.parquet"))
     shutil.rmtree(tmp)
-
-
-def test_stream_signatures(spark, corpus_rows, tmp_path):
-    inp = str(tmp_path / "in")
-    outp = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(inp)
-
-    _land(spark, synth.to_spark_rows(corpus_rows[:20]), inp, "b1")
-
-    q = stream_signatures(spark, inp, outp, ckpt, include_canonical=False)
-    try:
-        q.processAllAvailable()
-        n1 = spark.read.parquet(outp).count()
-        assert n1 == 20
-        # second micro-batch: new file appears, only its rows are appended
-        _land(spark, synth.to_spark_rows(corpus_rows[20:35]), inp, "b2")
-        q.processAllAvailable()
-        got = spark.read.parquet(outp)
-        assert got.count() == 35
-        assert set(got.columns) >= {"image_id", "sig", "disk_sig", "caption_sig"}
-    finally:
-        q.stop()
 
 
 def test_stream_dedup_first_seen(spark, corpus_rows, tmp_path):
